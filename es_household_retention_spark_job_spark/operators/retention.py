@@ -172,17 +172,25 @@ def has_parent_semi(encounters: DataFrame, persons: DataFrame) -> DataFrame:
     return encounters.join(persons, "person_id", "left_semi")
 
 
+def child_encounter_persons(
+    encounter: DataFrame, client_code: str, as_of: datetime
+) -> DataFrame:
+    """The person_id of every encounter ``has_child`` counts (HRP:182-193):
+    same client, admitted within [now-4y, now]."""
+    lo = epoch_ms(add_years(as_of, -HAS_CHILD_YEARS))
+    hi = epoch_ms(as_of)
+    return encounter.where(
+        (F.col("client_code") == client_code)
+        & admit_window(encounter, lo, hi)
+    ).select("person_id")
+
+
 def has_child_semi(
     persons: DataFrame, encounter: DataFrame, client_code: str, as_of: datetime
 ) -> DataFrame:
     """J4 — ES ``has_child`` (HRP:182-193): keep persons having ≥1 encounter
     of the same client admitted within [now-4y, now]."""
-    lo = epoch_ms(add_years(as_of, -HAS_CHILD_YEARS))
-    hi = epoch_ms(as_of)
-    qualifying = encounter.where(
-        (F.col("client_code") == client_code)
-        & admit_window(encounter, lo, hi)
-    ).select("person_id")
+    qualifying = child_encounter_persons(encounter, client_code, as_of)
     return persons.join(qualifying, "person_id", "left_semi")
 
 
@@ -445,16 +453,19 @@ def check_phase2_invariant(
     encounter: DataFrame,
     client_code: str,
     as_of: datetime,
-    persons: DataFrame | None = None,
+    behind: int | None = None,
 ) -> None:
     """C3 — HRP:786-791: throw if any household still has an unprocessed
-    person with a qualifying encounter (phase 1 incomplete). ``persons``
-    lets a caller that already holds (and cached) the eligible frame skip
-    the second store scan — run_incremental's case."""
-    if persons is None:
+    person with a qualifying encounter (phase 1 incomplete). ``behind`` is
+    that count when the caller already computed it — ``has_child_semi``'s
+    row count over its eligible frame, taken inside the pipeline's one
+    fused guard action (``pipeline._guarded_person_count``) — so the check
+    runs no action of its own."""
+    if behind is None:
         persons = eligible_persons(person, client_code)
-    behind = has_child_semi(persons, encounter, client_code, as_of)
-    if behind.limit(1).count() > 0:
+        qualifying = has_child_semi(persons, encounter, client_code, as_of)
+        behind = qualifying.limit(1).count()
+    if behind > 0:
         raise HouseholdRetentionNotReadyError(
             "households eligible for retention are available and not processed. "
             "Household retention processing step 1 needs to be run to completion "

@@ -3,8 +3,9 @@ keyed parquet person store.
 
 Phase 1 (HRP:305-648): guard count (C2) -> flagship pipeline -> pack nested
 history (A5) -> upsert into the person table (S7).
-Phase 2 (HRP:650-809): invariant throw if phase 1 incomplete (C3) -> guard
-count -> constant not-retained stamp -> pack -> upsert.
+Phase 2 (HRP:650-809): guard count and the phase-1-incomplete invariant
+(C3) in one action, throwing on either -> constant not-retained stamp ->
+pack -> upsert.
 
 Because the upsert writes ``household_retention_history``, re-running either
 phase is a no-op: processed persons now fail the P8 "unprocessed" predicate
@@ -60,7 +61,9 @@ def _load_inputs(spark: SparkSession, person_path: str, encounter_path: str):
     return person, encounter
 
 
-def _guarded_person_count(persons, phase: str) -> int:
+def _guarded_person_count(
+    persons, phase: str, processed=None, qualifying=None
+) -> dict[str, int]:
     """The S6 guard count, with the person→household functional dependence
     made LOUD (round-14 advice fix): ``pack_history`` groups on
     (household, person_id) — identical groups to person_id alone exactly
@@ -70,19 +73,51 @@ def _guarded_person_count(persons, phase: str) -> int:
     person_id)`` would propagate them. The keyed person sink already
     enforces id uniqueness at publish; this check makes an out-of-contract
     input (a hand-written store, a foreign table) fail at the guard that
-    ALREADY runs an action, not at read-back — one agg, zero extra jobs."""
-    row = persons.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("person_id").alias("n_ids"),
-    ).first()
-    if row["n"] != row["n_ids"]:
+    ALREADY runs an action, not at read-back.
+
+    The same action runs a pipeline's other guards. Given ``processed``
+    (the person_ids a phase over ``persons`` marked processed) and
+    ``qualifying`` (``R.child_encounter_persons``), it returns, in one
+    row:
+
+    * ``n`` — the eligible rows, checked person_id-unique;
+    * ``n2`` — eligible persons not in ``processed``: those still eligible
+      after that phase (all of them without ``processed``);
+    * ``behind`` — those of the ``n2`` with a qualifying encounter: the C3
+      invariant's count, ``has_child_semi``'s semantics.
+
+    The three person_id lists are tagged, unioned and grouped by
+    person_id — no join, two exchanges — so the guards cost one driver
+    round trip, and that action is what materialises every cached frame
+    they read."""
+    src = F.col("_src")
+    tagged = persons.select("person_id", F.lit(0).alias("_src"))
+    for i, ids in ((1, processed), (2, qualifying)):
+        if ids is not None:
+            ids = ids.select("person_id", F.lit(i).alias("_src"))
+            tagged = tagged.unionByName(ids)
+    per_id = tagged.groupBy("person_id").agg(
+        F.count_if(src == 0).alias("rows"),
+        F.max(src == 1).alias("done"),
+        F.max(src == 2).alias("qualifies"),
+    )
+    eligible = F.col("rows") > 0
+    left = eligible & ~F.col("done")
+    row = per_id.agg(
+        F.coalesce(F.sum("rows"), F.lit(0)).alias("n"),
+        F.count_if(eligible & F.col("person_id").isNotNull()).alias("n_ids"),
+        F.count_if(left).alias("n2"),
+        F.count_if(left & F.col("qualifies")).alias("behind"),
+    ).first().asDict()
+    n_ids = row.pop("n_ids")
+    if row["n"] != n_ids:
         raise ValueError(
             f"{phase}: person store violates the person_id-unique contract "
-            f"({row['n']} eligible rows over {row['n_ids']} distinct ids) — "
+            f"({row['n']} eligible rows over {n_ids} distinct ids) — "
             "duplicate person docs can disagree on household and would "
             "write duplicate history rows; deduplicate the store first"
         )
-    return row["n"]
+    return row
 
 
 def run_phase1(
@@ -96,16 +131,24 @@ def run_phase1(
     """Returns the number of persons processed (0 = skipped, C2)."""
     person, encounter = _load_inputs(spark, person_path, encounter_path)
 
-    persons = R.eligible_persons(person, client_code)
-    n = _guarded_person_count(persons, "phase1")  # S6 guard (HRP:627-628)
-    log.info("phase1: %d persons without retention", n)
-    if n == 0:
-        log.info("phase1: nothing to process — skipping (HRP:643-645)")
-        return 0
+    # the eligible frame R.phase1 caches: persisting the same plan here
+    # makes its cache=True entry THIS one (the CacheManager keys entries by
+    # plan), so the guard count loads the cache phase 1 then reads, and the
+    # finally releases it — no entry outlives the call for every later
+    # refreshByPath on the store to re-plan
+    persons = R.eligible_persons(person, client_code).persist()
+    try:
+        n = _guarded_person_count(persons, "phase1")["n"]  # S6 (HRP:627-628)
+        log.info("phase1: %d persons without retention", n)
+        if n == 0:
+            log.info("phase1: nothing to process — skipping (HRP:643-645)")
+            return 0
 
-    final = R.phase1(person, encounter, client_code, as_of, strategy=strategy)
-    packed = R.pack_history(final)
-    upsert_parquet(spark, person_path, packed, key="person_id")
+        final = R.phase1(person, encounter, client_code, as_of, strategy=strategy)
+        packed = R.pack_history(final)
+        upsert_parquet(spark, person_path, packed, key="person_id")
+    finally:
+        persons.unpersist()
     log.info("phase1: wrote retention history for %d persons", n)
     return n
 
@@ -121,10 +164,17 @@ def run_phase2(
     Raises HouseholdRetentionNotReadyError if phase 1 is incomplete (C3)."""
     person, encounter = _load_inputs(spark, person_path, encounter_path)
 
-    R.check_phase2_invariant(person, encounter, client_code, as_of)
-
+    # one action: the guard count and the C3 invariant's "behind" count
     persons = R.eligible_persons(person, client_code)
-    n = _guarded_person_count(persons, "phase2")
+    counts = _guarded_person_count(
+        persons,
+        "phase2",
+        qualifying=R.child_encounter_persons(encounter, client_code, as_of),
+    )
+    R.check_phase2_invariant(
+        person, encounter, client_code, as_of, behind=counts["behind"]
+    )
+    n = counts["n"]
     log.info("phase2: %d persons still without retention", n)
     if n == 0:
         log.info("phase2: nothing to process — skipping (HRP:802-804)")
@@ -208,13 +258,18 @@ def run_incremental(
        intermediate write.
     3. *Recompute over staged state*: phase 1 runs against the
        invalidated view; its packed output is cached (delta-bounded) and
-       APPLIED LOGICALLY on top of the view, and phase 2 (invariant check
-       included) runs against that — each phase reads the previous
-       phase's staged output, never the store. The phase-1 recompute over
-       the FULL encounter history of only the affected households
-       provably equals a from-scratch run restricted to them (the
-       pipeline never joins across households). Equivalence vs a full
-       recompute is pinned in tests/test_incremental_retention.py.
+       APPLIED LOGICALLY on top of the view — phase 2's eligible set
+       (invariant check included) is phase 1's minus the persons it
+       processed — so each phase reads the previous phase's staged
+       output, never the store. Nothing is counted just to
+       fill a cache: ONE fused guard action returns the phase-1 count
+       (with the person_id-unique check), the phase-2 count and the C3
+       invariant's count in one row, and in doing so materialises every
+       cached stage; a failed guard raises before any publish. The
+       phase-1 recompute over the FULL encounter history of only the
+       affected households provably equals a from-scratch run restricted
+       to them (the pipeline never joins across households). Equivalence
+       vs a full recompute is pinned in tests/test_incremental_retention.py.
     4. *ONE publish*: the phase-1 histories, the phase-2 not-retained
        stamps, and (defensively) any invalidated member neither phase
        restamped — three disjoint key sets — land in a SINGLE upsert, one
@@ -252,7 +307,13 @@ def run_incremental(
     strategy from the delta's actual size); step 2 touches only the
     affected members' buckets; step 3's phase-1 joins prune the full
     encounter scan to affected persons through the join itself. A daily
-    0.1% delta therefore costs ~0.1% of the backfill, not a rescan.
+    0.1% delta therefore costs ~0.1% of the backfill, not a rescan. At
+    that size the call is bound by per-action driver cost, not compute,
+    so with its default MoR publish it runs exactly THREE driver actions
+    for a non-empty delta: the blast-radius count (alone, so an empty
+    delta exits after one), the fused guard, and the partial-column
+    append's staged write, its only action (pinned in
+    tests/test_incremental_retention.py).
 
     The WRITE side is the store's trade to make: under the default
     copy-on-write sink any realistic affected-key set hashes into every
@@ -310,7 +371,6 @@ def run_incremental(
         .select("person_id")
     )
     members = members.persist()
-    packed1 = None
     cached = [members]
     try:
         n_affected = members.count()
@@ -354,58 +414,52 @@ def run_incremental(
         encounter = _sanitize_encounter(spark.read.parquet(encounter_path))
         validate(encounter, ENCOUNTER, allow_extra=True)
 
-        # 3a. phase 1 over the staged (invalidated) state. The eligible
-        # frame is CACHED and reused by the guard count AND the phase-1
-        # DAG (run_retention's separate calls each re-scan the store —
-        # the sf10 rehearsal showed those fixed store passes, not the
-        # band-join compute, dominating the incremental's wall time);
-        # the packed output is delta-bounded — materialize it once,
-        # every later step reads the cache instead of re-running the DAG
+        # 3. both phases over staged state, planned lazily; ONE guard
+        # action then materialises the cached stages. Phase 1 runs against
+        # the invalidated view. Phase 2's eligible set is the store after
+        # phase 1: phase 1's eligible persons minus those its histories
+        # mark processed — eligible_persons over the view with phase 1's
+        # output applied on top, without joining that store-wide view
+        # again (one history row per person: the guard checks person_id
+        # uniqueness). A persisted frame is materialised by its first
+        # consumer, so no step counts a frame just to fill its cache.
         persons1 = R.eligible_persons(person_work, client_code).persist()
         cached.append(persons1)
-        n1 = _guarded_person_count(persons1, "incremental/phase1")
-        log.info("incremental: %d persons without retention (phase 1)", n1)
-        if n1:
-            encounters = R.eligible_encounters(encounter, client_code, as_of)
-            admits = R.person_encounter_admits(persons1, encounters)
-            base = R.retention_base(
-                persons1,
-                R.retained_months(admits),
-                R.month_grid(spark, as_of),
-            )
-            final1 = R.fan_out_to_persons(
-                R.collapse_retention(base, as_of), persons1
-            )
-            packed1 = R.pack_history(final1).persist()
-            cached.append(packed1)
-            packed1.count()
+        encounters = R.eligible_encounters(encounter, client_code, as_of)
+        admits = R.person_encounter_admits(persons1, encounters)
+        base = R.retention_base(
+            persons1, R.retained_months(admits), R.month_grid(spark, as_of)
+        )
+        final1 = R.fan_out_to_persons(R.collapse_retention(base, as_of), persons1)
+        packed1 = R.pack_history(final1).persist()
+        cached.append(packed1)
+        processed1 = packed1.where(~R.is_unprocessed(F.col(hist)))
 
-        # 3b. phase 2 over staged-state ∘ staged-phase-1 — the invariant
-        # check and the eligibility predicate observe phase 1's output
-        # without any store round-trip, and share ONE cached eligible
-        # frame (check_phase2_invariant's own semantics, one scan)
-        if packed1 is not None:
-            p1 = packed1.select("person_id", F.col(hist).alias("_h1"))
-            person_after1 = (
-                person_work.join(p1, "person_id", "left")
-                .withColumn(hist, F.coalesce(F.col("_h1"), F.col(hist)))
-                .drop("_h1")
-            )
-        else:
-            person_after1 = person_work
-        persons2 = R.eligible_persons(person_after1, client_code).persist()
-        cached.append(persons2)
+        # the fused guard: n1 + the person_id-unique check, n2, and the C3
+        # invariant's "behind" count (over phase 2's eligible set) in one
+        # row. Raising here leaves the store byte-identical: nothing has
+        # been published.
+        counts = _guarded_person_count(
+            persons1,
+            "incremental/phase1",
+            processed=processed1,
+            qualifying=R.child_encounter_persons(encounter, client_code, as_of),
+        )
         R.check_phase2_invariant(
-            person_after1, encounter, client_code, as_of, persons=persons2
+            person_work, encounter, client_code, as_of, behind=counts["behind"]
         )
-        n2 = persons2.count()
+        n1, n2 = counts["n"], counts["n2"]
+        log.info("incremental: %d persons without retention (phase 1)", n1)
         log.info("incremental: %d persons stamped not-retained (phase 2)", n2)
-        packed2 = (
-            R.pack_history(R.phase2(persons2, as_of)).persist() if n2 else None
-        )
-        if packed2 is not None:
-            cached.append(packed2)
-            packed2.count()
+        stats = {
+            "affected_persons": n_affected,
+            "pre_version": pre_version,
+            "phase1_persons": n1,
+            "phase2_persons": n2,
+        }
+        if not (n_affected or n1 or n2):
+            log.info("incremental: nothing to publish")
+            return stats
 
         # 4. ONE publish: phase-1 histories ∪ phase-2 stamps ∪ leftover
         # invalidations (members neither phase restamped — empty by
@@ -413,7 +467,12 @@ def run_incremental(
         # invalidate-then-recompute). The three key sets are disjoint:
         # phase 2 only selects persons phase 1 left unprocessed, and the
         # leftover anti-joins both.
-        parts = [p for p in (packed1, packed2) if p is not None]
+        parts = [packed1] if n1 else []
+        if n2:
+            persons2 = persons1.join(
+                processed1.select("person_id"), "person_id", "left_anti"
+            )
+            parts.append(R.pack_history(R.phase2(persons2, as_of)))
         if n_affected:
             restamped = members.where(F.lit(False)).select("person_id")
             for p in parts:
@@ -422,26 +481,29 @@ def run_incremental(
                 "person_id", F.lit(None).cast(history_type).alias(hist)
             )
             parts.append(leftover)
-        if parts:
-            delta_out = parts[0]
-            for p in parts[1:]:
-                delta_out = delta_out.unionByName(p)
-            upsert_parquet(
-                spark,
-                person_path,
-                delta_out,
-                key="person_id",
-                app_meta=app_meta,
-                app_meta_expect=app_meta_expect,
-                mode=_incremental_write_mode(write_mode),
-            )
-            log.info("incremental: published one maintenance commit")
-        return {
-            "affected_persons": n_affected,
-            "pre_version": pre_version,
-            "phase1_persons": n1,
-            "phase2_persons": n2,
-        }
+        delta_out = parts[0]
+        for p in parts[1:]:
+            delta_out = delta_out.unionByName(p)
+        # the guard loaded every cache, so the publish reads packed1 and
+        # members from theirs and persons1 only through phase-2 stamps:
+        # without stamps, release it now, so the publish's refreshByPath
+        # has one cached plan fewer to re-plan
+        if not n2:
+            persons1.unpersist()
+            cached.remove(persons1)
+        upsert_parquet(
+            spark,
+            person_path,
+            delta_out,
+            key="person_id",
+            app_meta=app_meta,
+            app_meta_expect=app_meta_expect,
+            mode=_incremental_write_mode(write_mode),
+        )
+        log.info("incremental: published one maintenance commit")
+        return stats
     finally:
-        for df_ in cached:
+        # leaves first: Spark's uncacheQuery recompiles every cached
+        # dependent whose cache is not loaded
+        for df_ in reversed(cached):
             df_.unpersist()

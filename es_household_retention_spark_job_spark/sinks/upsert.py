@@ -2060,50 +2060,45 @@ def upsert_parquet(
 
     if any(c in updates.columns for c in RESERVED_COLS):
         raise ValueError(f"columns {RESERVED_COLS} are reserved by the sink")
+    mor = _sink_write_mode(mode) == "mor"
+    if (
+        mor
+        and _partial_deltas_enabled()
+        and stored is not None
+        and not {
+            f.name for f in stored.fields if f.name not in RESERVED_COLS
+        }.issubset(set(updates.columns))
+    ):
+        # PARTIAL-COLUMN DELTA: the updates carry a strict subset of the
+        # stored columns — append delta rows carrying only those columns,
+        # with NO base read at all (matched keys keep their other columns
+        # through the read-side per-column fold; unmatched keys insert with
+        # the missing columns null, which is exactly the ES partial-upsert
+        # insert semantics). The publish is O(|updates|) regardless of
+        # store size — the write-floor lever for single-column maintenance
+        # loops like pipeline.run_incremental (r10 verdict #1) — and its
+        # only Spark action is the staged write itself: the update lineage
+        # is consumed once, so it is neither persisted nor probed for its
+        # buckets.
+        _append_partial_delta(
+            spark,
+            path,
+            _with_bucket(updates, key, n_buckets),
+            key,
+            n_buckets,
+            stored,
+            app_meta,
+            app_meta_expect,
+        )
+        return
     # persist the update lineage: it is consumed twice (affected-bucket
     # discovery + the merge write) and may be arbitrarily expensive (the
     # whole phase-1 DAG, or a streaming micro-batch recompute)
     u = _with_bucket(updates, key, n_buckets).persist()
     try:
         affected = [r[BUCKET_COL] for r in u.select(BUCKET_COL).distinct().collect()]
-        mor = _sink_write_mode(mode) == "mor"
-        if (
-            mor
-            and _partial_deltas_enabled()
-            and stored is not None
-            and not {
-                f.name for f in stored.fields if f.name not in RESERVED_COLS
-            }.issubset(set(updates.columns))
-            and affected
-        ):
-            # PARTIAL-COLUMN DELTA: the updates carry a strict subset of
-            # the stored columns — append delta rows carrying only those
-            # columns, with NO base read at all (matched keys keep their
-            # other columns through the read-side per-column fold;
-            # unmatched keys insert with the missing columns null, which
-            # is exactly the ES partial-upsert insert semantics). The
-            # publish is O(|updates|) regardless of store size — the
-            # write-floor lever for single-column maintenance loops like
-            # pipeline.run_incremental (r10 verdict #1).
-            _append_partial_delta(
-                spark, path, u, key, affected, stored, app_meta, app_meta_expect
-            )
-            return
         if not affected:
-            if app_meta:
-                # an empty batch still commits its cursor advance (a fold
-                # over a change window that nets to zero must not refold
-                # forever); no files move — _publish with no affected dirs
-                # is a pure manifest commit (tmp is never opened)
-                _publish(
-                    path,
-                    f"{path}.__empty_commit__",
-                    [],
-                    schema=stored,
-                    app_meta=app_meta,
-                    app_meta_expect=app_meta_expect,
-                    cdc_staged="",  # nothing changed: empty capture
-                )
+            _commit_empty(path, stored, app_meta, app_meta_expect)
             return
         _merge_and_publish(
             spark,
@@ -2120,12 +2115,35 @@ def upsert_parquet(
         u.unpersist()
 
 
+def _commit_empty(
+    path: str,
+    stored: StructType | None,
+    app_meta: dict | None,
+    app_meta_expect: dict | None,
+) -> None:
+    """An empty batch still commits its cursor advance (a fold over a
+    change window that nets to zero must not refold forever); no files
+    move — ``_publish`` with no affected dirs is a pure manifest commit
+    (tmp is never opened). Without ``app_meta`` there is nothing to
+    commit and the version does not move."""
+    if app_meta:
+        _publish(
+            path,
+            f"{path}.__empty_commit__",
+            [],
+            schema=stored,
+            app_meta=app_meta,
+            app_meta_expect=app_meta_expect,
+            cdc_staged="",  # nothing changed: empty capture
+        )
+
+
 def _append_partial_delta(
     spark: SparkSession,
     path: str,
     u: DataFrame,
     key: str,
-    affected: list,
+    n_buckets: int,
     stored: StructType,
     app_meta: dict | None = None,
     app_meta_expect: dict | None = None,
@@ -2139,6 +2157,12 @@ def _append_partial_delta(
     tools/partial_delta_ladder.py). Schema evolution: update columns the
     store lacks extend the pinned schema exactly as a merge would.
 
+    ONE write, hash-partitioned on the bucket: every bucket's rows land in
+    one task, so each touched bucket gets exactly one delta file, and the
+    touched buckets are the bucket dirs the write staged — read off the
+    staging listing, not collected beforehand. A batch that stages no
+    bucket is an empty batch (``_commit_empty``).
+
     No write-time CDC sidecar is recorded (capture needs the matched
     preimages — the read this path exists to delete); feed windows
     containing this version are served by ``read_changes``' partial-aware
@@ -2146,7 +2170,7 @@ def _append_partial_delta(
     snapshot = _read_manifest(path) or _manifest_from_listing(path)
     stamped = u.withColumn(
         SEQ_COL, F.lit(int(snapshot.get("version", 0)) + 1).cast("long")
-    ).repartition(max(len(affected), 1), F.col(BUCKET_COL))
+    ).repartition(n_buckets, F.col(BUCKET_COL))
     partial_cols = sorted(
         c for c in u.columns if c not in (key, BUCKET_COL, SEQ_COL)
     )
@@ -2166,10 +2190,16 @@ def _append_partial_delta(
     tmp = f"{path}.__upsert_tmp_{uuid.uuid4().hex[:8]}"
     try:
         stamped.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
+        affected = sorted(
+            d for d in os.listdir(tmp) if d.startswith(f"{BUCKET_COL}=")
+        )
+        if not affected:
+            _commit_empty(path, stored, app_meta, app_meta_expect)
+            return
         final_schema = _publish(
             path,
             tmp,
-            [f"{BUCKET_COL}={b}" for b in affected],
+            affected,
             based_on=snapshot,
             schema=StructType(fields),
             append_only=True,

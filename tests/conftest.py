@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import math
 import os
+import shlex
 from datetime import date, datetime
 
 import duckdb
@@ -115,10 +116,51 @@ SLOW_TESTS = {
 }
 
 
+def _marker_expression_given(config) -> bool:
+    """True when the run names its own ``-m`` expression (``-m ""``
+    included: that one asks for the full suite)."""
+    args = [*config.invocation_params.args]
+    args += shlex.split(os.environ.get("PYTEST_ADDOPTS", ""))
+    return any(a.startswith("-m") for a in args)
+
+
+def _named_node_ids(config) -> list[str]:
+    """The node ids named on the command line (``path::name[...]``),
+    rewritten relative to the rootdir the way ``item.nodeid`` is."""
+    named = []
+    for arg in config.args:
+        path, sep, rest = str(arg).partition("::")
+        if sep:
+            full = os.path.join(config.invocation_params.dir, path)
+            rel = os.path.relpath(full, config.rootpath).replace(os.sep, "/")
+            named.append(f"{rel}::{rest}")
+    return named
+
+
 def pytest_collection_modifyitems(config, items):
+    """Mark the slow tier, and deselect it by default: only when the run
+    gives no ``-m`` of its own, and never a test named by node id on the
+    command line (a default ``-m "not slow"`` in pytest.ini's addopts
+    silently deselected those too)."""
     for item in items:
         if item.name in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    if _marker_expression_given(config):
+        return
+    named = _named_node_ids(config)
+    keep, drop = [], []
+    for item in items:
+        explicit = any(
+            item.nodeid == n or item.nodeid.startswith((n + "[", n + "::"))
+            for n in named
+        )
+        if item.name in SLOW_TESTS and not explicit:
+            drop.append(item)
+        else:
+            keep.append(item)
+    if drop:
+        config.hook.pytest_deselected(items=drop)
+        items[:] = keep
 
 
 @pytest.fixture(scope="session")

@@ -347,3 +347,109 @@ def test_flagship_loop_defaults_to_mor(spark, tmp_path, monkeypatch):
     )
     assert not (_read_manifest(p2) or {}).get("mor")
     assert _state(spark, p2) == want
+
+
+def _root_executions(spark, fn):
+    """Call ``fn`` and return its result and the number of ROOT SQL
+    executions (driver actions; nested executions carry a different root)
+    that started while it ran, from Spark's SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def ids():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return {
+            e.executionId(): e.rootExecutionId()
+            for e in (execs.apply(i) for i in range(execs.size()))
+        }
+
+    before = ids()
+    out = fn()
+    new = {e: root for e, root in ids().items() if e not in before}
+    return out, sum(1 for e, root in new.items() if e == root)
+
+
+def _cdc_store(spark, tmp_path, name):
+    """A processed store of the encounters before SPLIT_MS, the rest
+    ingested into the encounter store; returns its paths and the delta."""
+    _, encounter = fixture_frames(spark)
+    base = encounter.where(F.col("admit_date") < SPLIT_MS)
+    delta = encounter.where(F.col("admit_date") >= SPLIT_MS)
+    p_path, e_path = _setup(spark, tmp_path, name, base, fresh=True)
+    run_retention(spark, p_path, e_path, FIXTURE_CLIENT, FIXTURE_AS_OF)
+    encounter.write.mode("overwrite").parquet(e_path)
+    spark.catalog.refreshByPath(e_path)
+    return p_path, e_path, delta, encounter
+
+
+def test_incremental_action_budget(spark, tmp_path):
+    """A non-empty delta costs at most three driver actions — the
+    blast-radius count, the fused guard, the staged write — and an empty
+    delta exactly one (the blast-radius count)."""
+    p_path, e_path, delta, encounter = _cdc_store(spark, tmp_path, "budget")
+    stats, actions = _root_executions(
+        spark,
+        lambda: run_incremental(
+            spark, p_path, e_path, delta, FIXTURE_CLIENT, FIXTURE_AS_OF
+        ),
+    )
+    assert stats["affected_persons"] > 0 and stats["phase1_persons"] > 0
+    assert actions <= 3
+
+    other = encounter.where(F.col("client_code") == "OTHER")
+    stats, actions = _root_executions(
+        spark,
+        lambda: run_incremental(
+            spark, p_path, e_path, other, FIXTURE_CLIENT, FIXTURE_AS_OF
+        ),
+    )
+    assert stats["affected_persons"] == 0
+    assert actions == 1
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_pipeline_releases_every_cache_entry(spark, tmp_path):
+    """Neither phase leaves a CacheManager entry behind — after a backfill,
+    after a maintenance call, or after a guard that raises — so no later
+    refreshByPath on the store re-plans a stale cached frame."""
+    spark.catalog.clearCache()
+    p_path, e_path, delta, _ = _cdc_store(spark, tmp_path, "cache")
+    assert _cache_empty(spark)  # run_retention released its frames
+    run_incremental(spark, p_path, e_path, delta, FIXTURE_CLIENT, FIXTURE_AS_OF)
+    assert _cache_empty(spark)
+
+    person, _ = fixture_frames(spark)
+    dup = person.where(F.col("person_id") == "P_S1")
+    write_keyed_table(person.unionByName(dup), p_path, key="person_id", n_buckets=4)
+    with pytest.raises(ValueError, match="person_id-unique"):
+        run_incremental(
+            spark, p_path, e_path, delta, FIXTURE_CLIENT, FIXTURE_AS_OF
+        )
+    assert _cache_empty(spark)
+
+
+def test_incremental_duplicate_person_id_fails_before_publish(spark, tmp_path):
+    """A delta-touched household holding a duplicated person_id fails the
+    fused guard's person_id-unique check: nothing is published, the
+    version does not move and the state is unchanged."""
+    from es_household_retention_spark_job_spark.sinks.upsert import (
+        current_version,
+    )
+
+    person, encounter = fixture_frames(spark)
+    delta = encounter.where(F.col("admit_date") >= SPLIT_MS)
+    # P_S1's household is touched by the delta (E_S1)
+    dup = person.where(F.col("person_id") == "P_S1")
+    p_path, e_path = _setup(spark, tmp_path, "dup", encounter)
+    write_keyed_table(person.unionByName(dup), p_path, key="person_id", n_buckets=4)
+    v_before, state_before = current_version(p_path), _state(spark, p_path)
+    with pytest.raises(ValueError, match="person_id-unique"):
+        run_incremental(
+            spark, p_path, e_path, delta, FIXTURE_CLIENT, FIXTURE_AS_OF
+        )
+    assert current_version(p_path) == v_before
+    assert _state(spark, p_path) == state_before

@@ -317,10 +317,18 @@ def test_duplicate_person_ids_fail_loudly(spark):
     ok = spark.createDataFrame(
         [("P1", "H1"), ("P2", "H1")], "person_id string, household_id string"
     )
-    assert _guarded_person_count(ok, "test") == 2
+    assert _guarded_person_count(ok, "test") == {"n": 2, "n2": 2, "behind": 0}
+    # the fused form: phase 2's count and the invariant's ride the same
+    # action, and the uniqueness check still fires on the guarded frame
+    ids = lambda *xs: spark.createDataFrame([(x,) for x in xs], "person_id string")
+    assert _guarded_person_count(
+        ok, "test", processed=ids("P1"), qualifying=ids("P1", "P2", "P9")
+    ) == {"n": 2, "n2": 1, "behind": 1}
     dup = spark.createDataFrame(
         [("P1", "H1"), ("P1", "H2"), ("P2", "H1")],
         "person_id string, household_id string",
     )
     with pytest.raises(ValueError, match="person_id-unique"):
         _guarded_person_count(dup, "test")
+    with pytest.raises(ValueError, match="person_id-unique"):
+        _guarded_person_count(dup, "test", processed=ids("P1"), qualifying=ids())

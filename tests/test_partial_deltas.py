@@ -27,11 +27,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from es_household_retention_spark_job_spark.sinks.upsert import (
+    _with_bucket,
     compact_keyed_table,
     current_version,
     delete_keys,
     read_changes,
     read_keyed_table,
+    table_app_meta,
     upsert_parquet,
     write_keyed_table,
 )
@@ -399,6 +401,44 @@ def test_partial_disabled_env_restores_merge_path(spark, table, monkeypatch):
     assert man.get("mor") and not man.get("mor_cols")
     assert _state(spark, table)["b"] == {"v": 20, "w": "y"}
     assert _state(spark, table)["d"] == {"v": 40, "w": None}
+
+
+def test_partial_buckets_come_from_the_staged_write(spark, table, monkeypatch):
+    """The partial path reads its touched buckets off the staged write
+    instead of collecting them first. An empty batch stages none: with
+    ``app_meta`` it commits exactly one cursor-only version and writes no
+    data file; without it the version does not move. A non-empty batch
+    lands exactly one delta file in each bucket its keys hash to."""
+    import glob
+
+    _mor(monkeypatch)
+
+    def data_files():
+        return sorted(glob.glob(os.path.join(table, "_bucket=*", "*.parquet")))
+
+    files, v0 = data_files(), current_version(table)
+    empty = spark.createDataFrame([], "k string, v int")
+    upsert_parquet(spark, table, empty, key="k", n_buckets=4)
+    assert current_version(table) == v0
+    upsert_parquet(spark, table, empty, key="k", n_buckets=4, app_meta={"c": 7})
+    assert current_version(table) == v0 + 1
+    assert table_app_meta(table) == {"c": 7}
+    assert data_files() == files and not _manifest(table).get("mor")
+    assert _state(spark, table)["a"] == {"v": 1, "w": "x"}
+
+    updates = spark.createDataFrame(
+        [(k, i) for i, k in enumerate("abcdefgh")], "k string, v int"
+    )
+    upsert_parquet(spark, table, updates, key="k", n_buckets=4)
+    hashed = {
+        r[0]
+        for r in _with_bucket(updates, "k", 4).select("_bucket").distinct().collect()
+    }
+    mor = _manifest(table)["mor"]
+    assert sorted(mor) == sorted(f"_bucket={b}" for b in hashed)
+    assert all(len(fs) == 1 for fs in mor.values())
+    assert table_app_meta(table) == {"c": 7}  # the cursor survives
+    assert _state(spark, table)["h"] == {"v": 7, "w": None}
 
 
 def test_partial_random_sequences_match_dict_model(spark, tmp_path, monkeypatch):
