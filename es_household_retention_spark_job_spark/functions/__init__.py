@@ -196,6 +196,13 @@ P31 = 2147483647
 P_FP = 1000000007
 
 
+def hash_bucket(col: Column | str, n: int) -> Column:
+    """``pmod(xxhash64(col), n)`` — the one partition function behind the
+    keyed sink's buckets, the text index's term shards and the near-dup
+    index's band buckets (JVM-native; not reproducible driver-side)."""
+    return F.pmod(F.xxhash64(col), F.lit(n))
+
+
 def h60(col: Column | str) -> Column:
     """Portable 60-bit hash of a string column (Spark side)."""
     c = F.col(col) if isinstance(col, str) else col

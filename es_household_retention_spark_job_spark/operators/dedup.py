@@ -31,7 +31,8 @@ import random
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import P31, eager_cache, ensure_parallelism, h60
+from ..functions import P31, eager_cache, ensure_parallelism, h60, hash_bucket
+from ..sinks import manifest as M
 from .text import tokens, word_ngrams
 
 NGRAM_N = 3
@@ -744,6 +745,8 @@ def leakage_safe_split(
 
 NEARDUP_INDEX_BUCKETS = 64
 BAND_BUCKET_COL = "band_bucket"
+#: the index's atomically-replaced meta sidecar (its manifest)
+NEARDUP_META = "_meta.json"
 
 
 def neardup_index_frame(
@@ -756,8 +759,7 @@ def neardup_index_frame(
         shingle_sets(docs, text_col, id_col), id_col, gh_once=True
     )
     return bands.withColumn(
-        BAND_BUCKET_COL,
-        F.pmod(F.xxhash64("band_key"), F.lit(NEARDUP_INDEX_BUCKETS)),
+        BAND_BUCKET_COL, hash_bucket("band_key", NEARDUP_INDEX_BUCKETS)
     )
 
 
@@ -809,8 +811,6 @@ def build_neardup_index(
     # ledger, and sync files serving untouched (review finding: base
     # overwrite before the meta write opened a window where the NEW base
     # served under the OLD ledger/sync generation)
-    from ..sinks.upsert import _publish_lock
-
     old_meta = _read_neardup_meta(path) or {}
     base_dir = f"base-{_uuid.uuid4().hex[:8]}"
     # sortWithinPartitions(bucket, id): shuffle-free, clusters each
@@ -844,7 +844,7 @@ def build_neardup_index(
         "sync": [],
         "tombstones": [],
     }
-    with _publish_lock(path) as lk:
+    with M.lock(path) as lk:
         # everything below — cursor carry, version bump, commit, sweep —
         # reads the LIVE meta under the lock, never the pre-rewrite
         # snapshot (review findings: a stale old_meta regressed a
@@ -874,9 +874,9 @@ def build_neardup_index(
                 new_meta["last_epoch"] = int(as_of_epoch)
                 if epoch_stream is not None:
                     new_meta["epoch_stream"] = str(epoch_stream)
-        new_meta["version"] = int(cur.get("version", 0)) + 1
+        new_meta["version"] = M.version(cur) + 1
         lk.verify_owned()
-        _write_neardup_meta(path, new_meta)
+        M.write_atomic(path, NEARDUP_META, new_meta)
         # sweep exactly what CUR referenced (now superseded): its base
         # generation, and its listed sync/ledger files — not whole dirs,
         # so a racer's staged-but-uncommitted files survive (its commit
@@ -905,14 +905,12 @@ def build_neardup_index(
         # out on the sink's GC grace clock — never swept fresh, because
         # a dir that is not yet meta-pointed may belong to a rebuild
         # that is about to take this lock
-        from ..sinks.upsert import _gc_grace_seconds
-
         now = _time.time()
         for d in os.listdir(path):
             if d.startswith("base-") and d != base_dir:
                 p = os.path.join(path, d)
                 try:
-                    if now - os.path.getmtime(p) >= _gc_grace_seconds():
+                    if now - os.path.getmtime(p) >= M.gc_grace():
                         _shutil.rmtree(p, ignore_errors=True)
                 except OSError:
                     pass
@@ -934,54 +932,7 @@ _NEARDUP_PROBE_ISIN_MAX = 1024
 
 
 def _read_neardup_meta(path: str) -> dict | None:
-    import json as _json
-
-    p = os.path.join(path, "_meta.json")
-    if not os.path.isfile(p):
-        return None
-    with open(p) as fh:
-        return _json.load(fh)
-
-
-def _write_neardup_meta(path: str, meta: dict) -> None:
-    """Atomic replace — one meta write IS the commit for everything it
-    lists (sync band files, tombstone files, version, CDC cursor)."""
-    import json as _json
-    import uuid as _uuid
-
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, f".meta_{_uuid.uuid4().hex[:8]}.json")
-    with open(tmp, "w") as fh:
-        _json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, "_meta.json"))
-
-
-def _commit_neardup_meta(path: str, planned_from: dict, meta: dict) -> None:
-    """Optimistic commit for the band index's maintenance ops (delete /
-    upsert / sync cursor) — the text/ANN indexes' discipline on this
-    layout: under the sink's publish lock, verify the live meta is still
-    the one this op PLANNED from, else abort with ConcurrentWriteError
-    (two racing maintainers must lose loudly, never silently drop each
-    other's ledger/file lists). ``build_neardup_index`` keeps an
-    unconditional write — it defines a new generation by contract — but
-    BUMPS the live version under the same lock, so a racing sync that
-    planned from the pre-rebuild meta aborts here instead of committing
-    a meta that points at the swept old base dir."""
-    from ..sinks.upsert import ConcurrentWriteError, _publish_lock
-
-    with _publish_lock(path) as lk:
-        cur = _read_neardup_meta(path)
-        if cur is not None and int(cur.get("version", 1)) != int(
-            planned_from.get("version", 1)
-        ):
-            raise ConcurrentWriteError(
-                f"near-dup index at {path} was committed concurrently "
-                f"(meta version {cur.get('version')} != planned-from "
-                f"{planned_from.get('version')}); re-run this maintenance "
-                "op against the new state"
-            )
-        lk.verify_owned()
-        _write_neardup_meta(path, meta)
+    return M.read(path, NEARDUP_META)
 
 
 def _land_neardup_file(spark, path: str, sub: str, df, prefix: str) -> list[str]:
@@ -1183,14 +1134,12 @@ def _adopt_neardup_meta(spark, path: str, id_col: str | None) -> dict:
         # unguarded write rolled back a racer's committed ledger,
         # resurrecting its deleted docs); the loser returns the LIVE
         # meta and its own adopt file becomes an invisible stray.
-        from ..sinks.upsert import _publish_lock
-
-        with _publish_lock(path) as lk:
+        with M.lock(path) as lk:
             now_disk = _read_neardup_meta(path)
             if now_disk is not None:
                 return now_disk
             lk.verify_owned()
-            _write_neardup_meta(path, meta)
+            M.write_atomic(path, NEARDUP_META, meta)
     return meta
 
 
@@ -1244,8 +1193,7 @@ def delete_neardup_docs(
         "gen",
     )
     meta["tombstones"] = list(meta["tombstones"]) + names
-    meta["version"] = ver + 1
-    _commit_neardup_meta(path, planned_from, meta)
+    M.commit(path, NEARDUP_META, meta, planned_from)
     return len(present)
 
 
@@ -1396,12 +1344,11 @@ def upsert_neardup_docs(
         if ledger_override is not None
         else list(meta["tombstones"])
     ) + tomb_names
-    meta["version"] = ver + 1
     if epoch is not None:
         meta["last_epoch"] = int(epoch)
         if epoch_stream is not None:
             meta["epoch_stream"] = str(epoch_stream)
-    _commit_neardup_meta(path, planned_from, meta)
+    M.commit(path, NEARDUP_META, meta, planned_from)
     return {
         "deleted": int(n_deleted),
         "replaced": int(n_replaced),
@@ -1467,8 +1414,7 @@ def neardup_probe(
         eager=True
     )
     probe = minhash_bands(grams_new, id_col).withColumn(
-        BAND_BUCKET_COL,
-        F.pmod(F.xxhash64("band_key"), F.lit(NEARDUP_INDEX_BUCKETS)),
+        BAND_BUCKET_COL, hash_bucket("band_key", NEARDUP_INDEX_BUCKETS)
     )
     idx_narrow = index.select(
         F.col(id_col).alias("dup_of"), "band_key", BAND_BUCKET_COL

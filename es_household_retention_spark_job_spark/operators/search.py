@@ -64,7 +64,6 @@ term), which this operator's internals compose from.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import uuid
@@ -72,7 +71,8 @@ import uuid
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import eager_cache, ensure_parallelism
+from ..functions import eager_cache, ensure_parallelism, hash_bucket
+from ..sinks import manifest as M
 from .text import tokens
 
 #: BM25 parameters as exact rationals (k1 = 1.2, b = 0.75) — see module
@@ -365,68 +365,7 @@ def _parquet_footer_columns(path: str) -> list[str]:
 
 
 def _read_index_manifest(path: str) -> dict | None:
-    try:
-        with open(os.path.join(path, INDEX_MANIFEST)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
-
-
-def _write_index_manifest(path: str, manifest: dict) -> None:
-    tmp = os.path.join(path, f".{INDEX_MANIFEST}.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(path, INDEX_MANIFEST))
-
-
-def _list_tf_files(path: str) -> dict[str, list[str]]:
-    tf_root = os.path.join(path, "tf")
-    return {
-        d: sorted(
-            f
-            for f in os.listdir(os.path.join(tf_root, d))
-            if f.endswith(".parquet")
-        )
-        for d in os.listdir(tf_root)
-        if d.startswith(f"{INDEX_SHARD_COL}=")
-    }
-
-
-def _index_gc_grace() -> float:
-    """Seconds a displaced tf file / df-stats generation stays on disk for
-    in-flight readers (``SPARK_GRAFT_INDEX_GC_GRACE``, default 300 — the
-    same knob shape as the keyed sink's ``SPARK_GRAFT_SINK_GC_GRACE``)."""
-    return float(os.environ.get("SPARK_GRAFT_INDEX_GC_GRACE", "300"))
-
-
-def _roll_retired(manifest: dict, now: float, new_entry: dict | None) -> list[dict]:
-    """The manifest's ``retired`` ledger rolled forward for a new commit:
-    entries still inside the time-based grace window are CARRIED (their tf
-    files / generation dirs stay referenced, so GC keeps them); entries
-    past the grace drop out, making their files sweepable by this commit's
-    GC. ``new_entry`` records what THIS commit displaces, timestamped now.
-
-    Grace is wall-clock, not maintenance-cycles: a reader that planned
-    from the previous manifest keeps its files for at least the grace
-    window even under a fast append/compact loop (round-8's cycle-counted
-    grace could reclaim a slow reader's files after two quick commits).
-    Legacy ``prev_tf`` manifests (the old one-cycle grace) convert to a
-    retired entry stamped now — conservative: the grace restarts."""
-    grace = _index_gc_grace()
-    retired = [
-        e
-        for e in manifest.get("retired", [])
-        if now - float(e.get("ts", 0)) < grace
-    ]
-    if manifest.get("prev_tf"):
-        retired.append({"ts": now, "tf": manifest["prev_tf"], "gens": []})
-    if new_entry is not None and (
-        new_entry.get("tf")
-        or new_entry.get("gens")
-        or new_entry.get("tombstones")
-    ):
-        retired.append(new_entry)
-    return retired
+    return M.read(path, INDEX_MANIFEST)
 
 
 def _gc_index_gens(path: str, keep: set[str]) -> None:
@@ -466,11 +405,11 @@ def build_text_index(
 
     Maintenance contract: a REBUILD (this function) overwrites ``tf/`` in
     place and is stop-the-world — a new corpus snapshot gets a new index
-    path (rebuild-on-snapshot, same as the dedup signatures). An APPEND
+    path (rebuild-on-snapshot, same as the dedup signatures). Its commit
+    moves the manifest version past the live one, so a maintenance op
+    planned before the rebuild aborts instead of committing over it. An APPEND
     (``append_text_index``) is reader-atomic via the manifest."""
-    shard = F.pmod(F.xxhash64(F.col("term")), F.lit(n_shards)).alias(
-        INDEX_SHARD_COL
-    )
+    shard = hash_bucket("term", n_shards).alias(INDEX_SHARD_COL)
     with_dl = docs.select(
         id_col,
         F.size(tokens(text_col)).cast("long").alias("dl"),
@@ -520,15 +459,16 @@ def build_text_index(
     ).withColumn("n_shards", F.lit(n_shards)).write.mode("overwrite").parquet(
         f"{path}/{stats_dir}"
     )
-    _write_index_manifest(
+    M.commit(
         path,
+        INDEX_MANIFEST,
         {
-            "version": 1,
             "n_shards": int(n_shards),
-            "tf": _list_tf_files(path),
+            "tf": M.partition_files(f"{path}/tf", INDEX_SHARD_COL),
             "df": df_dir,
             "stats": stats_dir,
         },
+        None,
     )
     _gc_index_gens(path, keep={df_dir, stats_dir})
 
@@ -556,7 +496,7 @@ def _term_shards(spark, vocab: list[str], n_shards: int) -> set[int]:
         rows = (
             spark.createDataFrame([(t,) for t in missing], "term string")
             .select(
-                "term", F.pmod(F.xxhash64("term"), F.lit(n_shards)).alias("s")
+                "term", hash_bucket("term", n_shards).alias("s")
             )
             .collect()
         )
@@ -629,9 +569,7 @@ def append_text_index(
         )
     n_shards = int(manifest["n_shards"])
     stats_old = spark.read.parquet(f"{path}/{manifest['stats']}").collect()[0]
-    shard = F.pmod(F.xxhash64(F.col("term")), F.lit(n_shards)).alias(
-        INDEX_SHARD_COL
-    )
+    shard = hash_bucket("term", n_shards).alias(INDEX_SHARD_COL)
     with_dl = docs_delta.select(
         id_col,
         F.size(tokens(text_col)).cast("long").alias("dl"),
@@ -746,7 +684,6 @@ def append_text_index(
         # non-streaming appends carry the previous marker forward.
         now = time.time()
         new_manifest = {
-            "version": int(manifest.get("version", 1)) + 1,
             "n_shards": n_shards,
             "tf": {d: sorted(fs) for d, fs in new_tf.items()},
             # per-file doc-id Blooms of the delta files (locate prune —
@@ -765,7 +702,7 @@ def append_text_index(
             # retired ledger: readers that planned from the previous
             # manifest keep them for the full grace window, not just one
             # maintenance cycle
-            "retired": _roll_retired(
+            "retired": M.roll_retired(
                 manifest,
                 now,
                 {"ts": now, "tf": {}, "gens": [manifest["df"], manifest["stats"]]},
@@ -790,7 +727,7 @@ def append_text_index(
                 new_manifest["last_epoch"] = int(manifest["last_epoch"])
             if manifest.get("epoch_stream") is not None:
                 new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _write_index_manifest(path, new_manifest)
+        M.commit(path, INDEX_MANIFEST, new_manifest, manifest)
         _gc_index_gens(
             path, keep={df_dir, stats_dir} | _retired_gens(new_manifest)
         )
@@ -847,7 +784,7 @@ def _bootstrap_index_manifest(spark, path: str) -> dict:
         "n_shards": int(stats["n_shards"]),
         "tf": {
             d: [f for f in fs if not f.startswith("gen-")]
-            for d, fs in _list_tf_files(path).items()
+            for d, fs in M.partition_files(f"{path}/tf", INDEX_SHARD_COL).items()
         },
         "df": "df",
         "stats": "stats",
@@ -1110,8 +1047,8 @@ def _sweep_stray_tf(path: str, manifest: dict) -> None:
     ``tf`` nor its ``retired`` ledger: leftovers of crashed appends
     (moved in, never committed) and compaction-replaced files whose
     time-based grace has expired. The retired ledger (rolled by
-    ``_roll_retired`` on every commit) keeps displaced file sets alive
-    for ``SPARK_GRAFT_INDEX_GC_GRACE`` seconds so a slow reader that
+    ``manifest.roll_retired`` on every commit) keeps displaced file sets
+    alive for ``SPARK_GRAFT_SINK_GC_GRACE`` seconds so a slow reader that
     planned from a previous manifest keeps its files even under a fast
     maintenance loop; legacy ``prev_tf`` is honored for manifests written
     before the ledger existed."""
@@ -1163,7 +1100,7 @@ def compact_text_index(spark, path: str) -> int:
     names, ONE manifest replace publishes them, and the REPLACED files
     stay on disk via the manifest's time-based ``retired`` ledger
     (readers that planned against the prior manifest keep their files for
-    ``SPARK_GRAFT_INDEX_GC_GRACE`` seconds; a later commit's sweep
+    ``SPARK_GRAFT_SINK_GC_GRACE`` seconds; a later commit's sweep
     reclaims them once the grace expires). df/stats are untouched —
     compaction changes layout, never content."""
     import shutil
@@ -1216,7 +1153,6 @@ def compact_text_index(spark, path: str) -> int:
                 new_tf.pop(d, None)
         now = time.time()
         new_manifest = {
-            "version": int(manifest.get("version", 1)) + 1,
             "n_shards": n_shards,
             "tf": new_tf,
             # rewritten files get fresh Blooms (usually over-cap: a
@@ -1233,7 +1169,7 @@ def compact_text_index(spark, path: str) -> int:
             "df": manifest["df"],
             "stats": manifest["stats"],
             # time-based grace for the replaced files (see _sweep_stray_tf)
-            "retired": _roll_retired(
+            "retired": M.roll_retired(
                 manifest,
                 now,
                 {
@@ -1250,7 +1186,7 @@ def compact_text_index(spark, path: str) -> int:
             new_manifest["last_epoch"] = int(manifest["last_epoch"])
         if manifest.get("epoch_stream") is not None:
             new_manifest["epoch_stream"] = manifest["epoch_stream"]
-        _write_index_manifest(path, new_manifest)
+        M.commit(path, INDEX_MANIFEST, new_manifest, manifest)
         # reclaim crashed-compaction leftovers now (the retired ledger in
         # the just-committed manifest preserves the grace window for the
         # files THIS compaction replaced; anything referenced by neither
@@ -1995,7 +1931,6 @@ def delete_text_docs(
         ).write.mode("overwrite").parquet(f"{path}/{stats_dir}")
         now = time.time()
         new_manifest = {
-            "version": int(manifest.get("version", 1)) + 1,
             "n_shards": int(manifest["n_shards"]),
             "tf": {d: sorted(fs) for d, fs in manifest["tf"].items()},
             "tf_bloom": _carry_tf_blooms(manifest, manifest["tf"], {}),
@@ -2004,7 +1939,7 @@ def delete_text_docs(
             "stats": stats_dir,
             "tombstones": sorted(list(existing) + names),
             "n_tombstones": int(manifest.get("n_tombstones", 0)) + n_found,
-            "retired": _roll_retired(
+            "retired": M.roll_retired(
                 manifest,
                 now,
                 {
@@ -2023,7 +1958,7 @@ def delete_text_docs(
                 new_manifest["last_epoch"] = int(manifest["last_epoch"])
             if manifest.get("epoch_stream") is not None:
                 new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _write_index_manifest(path, new_manifest)
+        M.commit(path, INDEX_MANIFEST, new_manifest, manifest)
         _gc_index_gens(
             path, keep={df_dir, stats_dir} | _retired_gens(new_manifest)
         )
@@ -2130,9 +2065,7 @@ def upsert_text_docs(
             retired = tf_all.join(F.broadcast(idf), id_col, "left_semi")
         retired = eager_cache(retired)
     # new content, versioned ABOVE the tombstone's as_of
-    shard = F.pmod(F.xxhash64(F.col("term")), F.lit(n_shards)).alias(
-        INDEX_SHARD_COL
-    )
+    shard = hash_bucket("term", n_shards).alias(INDEX_SHARD_COL)
     with_dl = docs.select(
         id_col,
         F.size(tokens(text_col)).cast("long").alias("dl"),
@@ -2244,7 +2177,6 @@ def upsert_text_docs(
 
         now = time.time()
         new_manifest = {
-            "version": ver + 1,
             "n_shards": n_shards,
             "tf": {d: sorted(fs) for d, fs in new_tf.items()},
             "tf_bloom": _carry_tf_blooms(
@@ -2257,7 +2189,7 @@ def upsert_text_docs(
             ),
             "df": df_dir,
             "stats": stats_dir,
-            "retired": _roll_retired(
+            "retired": M.roll_retired(
                 manifest,
                 now,
                 {
@@ -2281,7 +2213,7 @@ def upsert_text_docs(
                 new_manifest["last_epoch"] = int(manifest["last_epoch"])
             if manifest.get("epoch_stream") is not None:
                 new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _write_index_manifest(path, new_manifest)
+        M.commit(path, INDEX_MANIFEST, new_manifest, manifest)
         _gc_index_gens(
             path, keep={df_dir, stats_dir} | _retired_gens(new_manifest)
         )

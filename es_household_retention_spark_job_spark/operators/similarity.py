@@ -24,7 +24,6 @@ and any oracle recompute identical planes; no RNG state is shipped.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import uuid
 
@@ -32,6 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import ensure_parallelism
+from ..sinks import manifest as M
 
 EMB_DIM = 64
 #: multi-table LSH shape: 8 tables × 6 sign-bits. Collision probability for
@@ -515,63 +515,7 @@ ANN_MANIFEST = "_ann_manifest.json"
 
 
 def _read_ann_manifest(path: str) -> dict | None:
-    try:
-        with open(os.path.join(path, ANN_MANIFEST)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
-
-
-def _write_ann_manifest(path: str, manifest: dict) -> None:
-    tmp = os.path.join(path, f".{ANN_MANIFEST}.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(path, ANN_MANIFEST))
-
-
-def _commit_ann_manifest(path: str, planned_from: dict, new_manifest: dict) -> None:
-    """Optimistic commit for the index's single-writer maintenance ops
-    (append / compact / split): verify, UNDER THE SAME LOCK as the
-    replace, that the manifest is still the one this op PLANNED from.
-    The maintenance contract is single-writer (like the text index), so
-    the check never fires in normal operation — it converts an operator
-    error (two maintenance loops pointed at one index) from a silent
-    lost-update into a loud abort, the sink's ConcurrentWriteError
-    discipline applied to the index ledger. The check+replace is
-    serialized by the sink's ``_publish_lock`` (r10 advisory: a bare
-    read-check-then-replace lets two racers whose checks both run before
-    either ``os.replace`` BOTH commit, silently dropping the earlier
-    update — exactly the interleaving the check exists to make loud)."""
-    from ..sinks.upsert import ConcurrentWriteError, _publish_lock
-
-    with _publish_lock(path) as lk:
-        cur = _read_ann_manifest(path)
-        if cur is not None and int(cur.get("version", 1)) != int(
-            planned_from.get("version", 1)
-        ):
-            raise ConcurrentWriteError(
-                f"vector index at {path} was committed concurrently (manifest "
-                f"version {cur.get('version')} != planned-from "
-                f"{planned_from.get('version')}); re-run this maintenance op "
-                "against the new state"
-            )
-        lk.verify_owned()
-        _write_ann_manifest(path, new_manifest)
-
-
-def _list_cell_files(path: str, sub: str = "cells") -> dict[str, list[str]]:
-    root = os.path.join(path, sub)
-    if not os.path.isdir(root):
-        return {}
-    return {
-        d: sorted(
-            f
-            for f in os.listdir(os.path.join(root, d))
-            if f.endswith(".parquet")
-        )
-        for d in os.listdir(root)
-        if d.startswith(f"{ANN_CELL_COL}=")
-    }
+    return M.read(path, ANN_MANIFEST)
 
 
 def _bootstrap_ann_manifest(spark, path: str) -> dict:
@@ -590,7 +534,7 @@ def _bootstrap_ann_manifest(spark, path: str) -> dict:
         "n_cells": int(n_cells),
         "cells": {
             d: [f for f in fs if not f.startswith("gen-")]
-            for d, fs in _list_cell_files(path).items()
+            for d, fs in M.partition_files(f"{path}/cells", ANN_CELL_COL).items()
         },
     }
 
@@ -790,10 +734,9 @@ def build_ann_index(
         for r in assigned.groupBy(ANN_CELL_COL).agg(F.count("*").alias("n")).collect()
     }
     manifest = {
-        "version": 1,
         "n_cells": int(n_cells),
-        "cells": _list_cell_files(path),
-        "codes": _list_cell_files(path, "codes"),
+        "cells": M.partition_files(f"{path}/cells", ANN_CELL_COL),
+        "codes": M.partition_files(f"{path}/codes", ANN_CELL_COL),
         "cell_rows": cell_rows,
     }
     if pq:
@@ -811,11 +754,11 @@ def build_ann_index(
             "overwrite"
         ).partitionBy(ANN_CELL_COL).parquet(f"{path}/pq")
         _write_pq_books(spark, os.path.join(path, "pq_books"), cb)
-        manifest["pq"] = _list_cell_files(path, "pq")
+        manifest["pq"] = M.partition_files(f"{path}/pq", ANN_CELL_COL)
         manifest["pq_params"] = {"m": m, "ksub": ksub}
         manifest["pq_books_dir"] = "pq_books"
     assigned.unpersist()
-    _write_ann_manifest(path, manifest)
+    M.commit(path, ANN_MANIFEST, manifest, None)
     if pq:
         # per-corpus rerank calibration (atomic follow-up commit): what
         # lets knn_ann_auto admit the tier by default with a recall floor
@@ -1177,34 +1120,6 @@ def _move_staged_cells(
     return moved
 
 
-def _ann_roll_retired(
-    manifest: dict, now: float, new_entry: dict | None
-) -> list[dict]:
-    """The ANN manifest's retired-file ledger rolled forward — the vector
-    twin of the text index's ``_roll_retired``: entries inside the
-    wall-clock grace (``SPARK_GRAFT_INDEX_GC_GRACE``, shared knob) are
-    carried so a reader that planned from a previous manifest keeps its
-    files; expired entries drop out and become sweepable."""
-    from .search import _index_gc_grace
-
-    grace = _index_gc_grace()
-    retired = [
-        e
-        for e in manifest.get("retired", [])
-        if now - float(e.get("ts", 0)) < grace
-    ]
-    if new_entry is not None and (
-        new_entry.get("cells")
-        or new_entry.get("codes")
-        or new_entry.get("pq")
-        or new_entry.get("centroids_dir")
-        or new_entry.get("pq_books_dir")
-        or new_entry.get("tombstones")
-    ):
-        retired.append(new_entry)
-    return retired
-
-
 def _sweep_stray_ann(path: str, manifest: dict) -> None:
     """Delete cells/codes files referenced by neither the committed
     manifest nor its retired ledger: crashed appends' leftovers and
@@ -1393,7 +1308,6 @@ def append_ann_index(
             c = str(r[ANN_CELL_COL])
             cell_rows[c] = int(cell_rows.get(c, 0)) + int(r["n"])
         new_manifest = {
-            "version": int(manifest.get("version", 1)) + 1,
             "n_cells": int(manifest["n_cells"]),
             "cells": {d: sorted(fs) for d, fs in new_cells.items()},
             "cell_rows": cell_rows,
@@ -1433,7 +1347,7 @@ def append_ann_index(
         for carry in ("pq_params", "pq_books_dir", "pq_calibration", "tombstones", "n_tombstones"):
             if manifest.get(carry) is not None:
                 new_manifest[carry] = manifest[carry]
-        new_manifest["retired"] = _ann_roll_retired(manifest, time.time(), None)
+        new_manifest["retired"] = M.roll_retired(manifest, time.time(), None)
         if epoch is not None:
             # epoch marker + stream label commit together (anonymous
             # epochs must not inherit a prior stream's label — see
@@ -1446,7 +1360,7 @@ def append_ann_index(
                 new_manifest["last_epoch"] = int(manifest["last_epoch"])
             if manifest.get("epoch_stream") is not None:
                 new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _commit_ann_manifest(path, manifest, new_manifest)
+        M.commit(path, ANN_MANIFEST, new_manifest, manifest)
         # reclaim crashed appends' never-committed leftovers (invisible
         # to every reader); retired-ledger files stay until their grace
         # expires
@@ -1471,7 +1385,7 @@ def compact_ann_index(spark, path: str) -> int:
     Reader-atomic like append: staged files move in under generation
     names, ONE manifest replace publishes them, and the REPLACED files
     stay on disk via the time-based retired ledger
-    (``SPARK_GRAFT_INDEX_GC_GRACE``) for readers that planned from the
+    (``SPARK_GRAFT_SINK_GC_GRACE``) for readers that planned from the
     prior manifest."""
     import shutil
     import time
@@ -1507,7 +1421,6 @@ def compact_ann_index(spark, path: str) -> int:
         return 0
     gen = uuid.uuid4().hex[:8]
     new_manifest = {
-        "version": int(manifest.get("version", 1)) + 1,
         "n_cells": int(manifest["n_cells"]),
         "cells": {d: list(fs) for d, fs in manifest["cells"].items()},
     }
@@ -1551,7 +1464,7 @@ def compact_ann_index(spark, path: str) -> int:
             for d, names in _move_staged_cells(path, stage, gen, key).items():
                 new_manifest[key][d] = sorted(names)  # REPLACES the set
         now = time.time()
-        new_manifest["retired"] = _ann_roll_retired(
+        new_manifest["retired"] = M.roll_retired(
             manifest,
             now,
             {
@@ -1571,7 +1484,7 @@ def compact_ann_index(spark, path: str) -> int:
             new_manifest["last_epoch"] = int(manifest["last_epoch"])
         if manifest.get("epoch_stream") is not None:
             new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _commit_ann_manifest(path, manifest, new_manifest)
+        M.commit(path, ANN_MANIFEST, new_manifest, manifest)
         _sweep_stray_ann(path, new_manifest)
     finally:
         for stage in stages:
@@ -2355,7 +2268,6 @@ def split_ann_cells(
     stage_pq = f"{path}/.pq_split_{gen}"
     stage_tomb = f"{path}/.tombstones_split_{gen}"
     new_manifest = {
-        "version": int(manifest.get("version", 1)) + 1,
         "n_cells": len(new_cents),
         "cells": {d: list(fs) for d, fs in manifest["cells"].items()},
     }
@@ -2450,7 +2362,7 @@ def split_ann_cells(
         ).write.mode("overwrite").parquet(os.path.join(path, cent_dir))
         new_manifest["centroids_dir"] = cent_dir
         now = time.time()
-        new_manifest["retired"] = _ann_roll_retired(
+        new_manifest["retired"] = M.roll_retired(
             manifest,
             now,
             {
@@ -2466,7 +2378,7 @@ def split_ann_cells(
             new_manifest["last_epoch"] = int(manifest["last_epoch"])
         if manifest.get("epoch_stream") is not None:
             new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _commit_ann_manifest(path, manifest, new_manifest)
+        M.commit(path, ANN_MANIFEST, new_manifest, manifest)
         _sweep_stray_ann(path, new_manifest)
     finally:
         all_assigned.unpersist()
@@ -3017,7 +2929,6 @@ def add_pq_sidecar(
         books_dir = f"pq_books_gen-{gen}"
         _write_pq_books(spark, os.path.join(path, books_dir), cb)
         new_manifest = {
-            "version": int(manifest.get("version", 1)) + 1,
             "n_cells": int(manifest["n_cells"]),
             "cells": {d: list(fs) for d, fs in manifest["cells"].items()},
             "pq": {d: sorted(names) for d, names in moved.items()},
@@ -3041,7 +2952,7 @@ def add_pq_sidecar(
             "pq": {d: list(fs) for d, fs in manifest.get("pq", {}).items()},
             "pq_books_dir": manifest.get("pq_books_dir"),
         }
-        new_manifest["retired"] = _ann_roll_retired(
+        new_manifest["retired"] = M.roll_retired(
             manifest,
             now,
             old_pq if (old_pq["pq"] or old_pq["pq_books_dir"]) else None,
@@ -3050,7 +2961,7 @@ def add_pq_sidecar(
             new_manifest["last_epoch"] = int(manifest["last_epoch"])
         if manifest.get("epoch_stream") is not None:
             new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _commit_ann_manifest(path, manifest, new_manifest)
+        M.commit(path, ANN_MANIFEST, new_manifest, manifest)
         _sweep_stray_ann(path, new_manifest)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
@@ -3219,9 +3130,8 @@ def _commit_degenerate_pq_calibration(
         "degenerate": True,
     }
     new_manifest = dict(manifest)
-    new_manifest["version"] = int(manifest.get("version", 1)) + 1
     new_manifest["pq_calibration"] = calib
-    _commit_ann_manifest(path, manifest, new_manifest)
+    M.commit(path, ANN_MANIFEST, new_manifest, manifest)
     return calib
 
 
@@ -3418,9 +3328,8 @@ def calibrate_pq_refine(
         "breach": bool(refine > cand_per_query / 8),
     }
     new_manifest = dict(manifest)
-    new_manifest["version"] = int(manifest.get("version", 1)) + 1
     new_manifest["pq_calibration"] = calib
-    _commit_ann_manifest(path, manifest, new_manifest)
+    M.commit(path, ANN_MANIFEST, new_manifest, manifest)
     return calib
 
 
@@ -3524,7 +3433,6 @@ def delete_ann_ids(
         for c, n in per_cell.items():
             cell_rows[c] = max(int(cell_rows.get(c, 0)) - n, 0)
         new_manifest = {
-            "version": int(manifest.get("version", 1)) + 1,
             "n_cells": int(manifest["n_cells"]),
             "cells": {d: list(fs) for d, fs in manifest["cells"].items()},
             "cell_rows": cell_rows,
@@ -3539,7 +3447,7 @@ def delete_ann_ids(
         for carry in ("pq_params", "pq_books_dir", "pq_calibration", "centroids_dir"):
             if manifest.get(carry) is not None:
                 new_manifest[carry] = manifest[carry]
-        new_manifest["retired"] = _ann_roll_retired(manifest, time.time(), None)
+        new_manifest["retired"] = M.roll_retired(manifest, time.time(), None)
         if epoch is not None:
             new_manifest["last_epoch"] = int(epoch)
             if epoch_stream is not None:
@@ -3549,7 +3457,7 @@ def delete_ann_ids(
                 new_manifest["last_epoch"] = int(manifest["last_epoch"])
             if manifest.get("epoch_stream") is not None:
                 new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _commit_ann_manifest(path, manifest, new_manifest)
+        M.commit(path, ANN_MANIFEST, new_manifest, manifest)
         _sweep_stray_ann(path, new_manifest)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
@@ -3704,7 +3612,6 @@ def upsert_ann_vectors(
                 ).withColumnRenamed(id_col, "_tomb_id")
         gen = uuid.uuid4().hex[:8]
         new_manifest = {
-            "version": int(manifest.get("version", 1)) + 1,
             "n_cells": int(manifest["n_cells"]),
             "cells": {d: list(fs) for d, fs in manifest["cells"].items()},
         }
@@ -3881,7 +3788,7 @@ def upsert_ann_vectors(
             "pq": retiring["pq"],
             "tombstones": list(tomb_files),
         }
-        new_manifest["retired"] = _ann_roll_retired(
+        new_manifest["retired"] = M.roll_retired(
             manifest, now, entry if (touched or tomb_files) else None
         )
         if epoch is not None:
@@ -3893,7 +3800,7 @@ def upsert_ann_vectors(
                 new_manifest["last_epoch"] = int(manifest["last_epoch"])
             if manifest.get("epoch_stream") is not None:
                 new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _commit_ann_manifest(path, manifest, new_manifest)
+        M.commit(path, ANN_MANIFEST, new_manifest, manifest)
         _sweep_stray_ann(path, new_manifest)
         return {
             "replaced": int(n_replaced),
@@ -3975,7 +3882,6 @@ def retrain_ann_index(
     stages = []
     try:
         new_manifest = {
-            "version": int(manifest.get("version", 1)) + 1,
             "n_cells": k,
         }
 
@@ -4015,7 +3921,7 @@ def retrain_ann_index(
         ).write.mode("overwrite").parquet(os.path.join(path, cent_dir))
         new_manifest["centroids_dir"] = cent_dir
         now = time.time()
-        new_manifest["retired"] = _ann_roll_retired(
+        new_manifest["retired"] = M.roll_retired(
             manifest,
             now,
             {
@@ -4036,7 +3942,7 @@ def retrain_ann_index(
             new_manifest["last_epoch"] = int(manifest["last_epoch"])
         if manifest.get("epoch_stream") is not None:
             new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _commit_ann_manifest(path, manifest, new_manifest)
+        M.commit(path, ANN_MANIFEST, new_manifest, manifest)
         _sweep_stray_ann(path, new_manifest)
     finally:
         assigned.unpersist()

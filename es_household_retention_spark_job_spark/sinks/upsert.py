@@ -37,9 +37,11 @@ replace leaves stray unreferenced files (swept by a later vacuum); the
 manifest replace itself is atomic, so readers see the old or the new table,
 never a partial one.
 
-**Concurrent writers.** The manifest read-modify-write in ``_publish`` runs
-under an exclusive lock file (held for milliseconds, broken if stale), and
-every write carries the manifest snapshot its merge was computed from:
+**Concurrent writers.** The commit protocol — atomic sidecar replace, the
+exclusive lock file (held for milliseconds, broken if stale) and
+``ConcurrentWriteError`` — is ``sinks/manifest.py``, shared with every
+index. The manifest read-modify-write in ``_publish`` runs under that lock,
+and every write carries the manifest snapshot its merge was computed from:
 per-bucket optimistic concurrency. Writers touching DISJOINT buckets both
 land (each applies onto the current manifest); overlapping writes are
 DETECTED and the later one aborts with ``ConcurrentWriteError`` before any
@@ -68,6 +70,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from ..functions import hash_bucket
+from . import manifest as M
+from .manifest import ConcurrentWriteError
 
 BUCKET_COL = "_bucket"
 DEFAULT_BUCKETS = 16
@@ -338,10 +344,6 @@ def _cdc_capture_enabled() -> bool:
     return os.environ.get("SPARK_GRAFT_SINK_CDC", "on") != "off"
 
 
-def _gc_grace_seconds() -> float:
-    return float(os.environ.get("SPARK_GRAFT_SINK_GC_GRACE", "300"))
-
-
 def _keep_versions() -> int:
     """How many published versions stay time-travel readable (Delta's
     ``delta.deletedFileRetentionDuration`` in version units rather than
@@ -351,7 +353,7 @@ def _keep_versions() -> int:
 
 
 def _with_bucket(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
-    return df.withColumn(BUCKET_COL, F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)))
+    return df.withColumn(BUCKET_COL, hash_bucket(key, n_buckets))
 
 
 def _read_layout(path: str) -> dict:
@@ -379,22 +381,20 @@ def _write_layout(path: str, key: str, n_buckets: int, schema: StructType) -> No
     # upsert, and a concurrent reader resolves it on every read — a direct
     # truncating write exposes an empty/partial file in the truncate→write
     # window (observed as a reader JSONDecodeError under stress)
-    tmp = os.path.join(path, f".{LAYOUT_FILE}.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "key": key,
-                "n_buckets": n_buckets,
-                "schema": schema.jsonValue(),
-                # writer-environment audit: codec-backed artifacts (e.g.
-                # thumbnails) are deterministic only per backend, so the
-                # manifest records which backend wrote this table — a
-                # mixed-backend cluster becomes detectable from the sidecars
-                "writer_env": {"image_codec": codec_backend()},
-            },
-            f,
-        )
-    os.replace(tmp, os.path.join(path, LAYOUT_FILE))
+    M.write_atomic(
+        path,
+        LAYOUT_FILE,
+        {
+            "key": key,
+            "n_buckets": n_buckets,
+            "schema": schema.jsonValue(),
+            # writer-environment audit: codec-backed artifacts (e.g.
+            # thumbnails) are deterministic only per backend, so the
+            # manifest records which backend wrote this table — a
+            # mixed-backend cluster becomes detectable from the sidecars
+            "writer_env": {"image_codec": codec_backend()},
+        },
+    )
 
 
 def _stored_schema(layout: dict) -> StructType | None:
@@ -402,148 +402,8 @@ def _stored_schema(layout: dict) -> StructType | None:
     return StructType.fromJson(raw) if raw else None
 
 
-class ConcurrentWriteError(RuntimeError):
-    """Another writer rewrote one of this write's buckets between its
-    snapshot read and its publish — the merge was computed against stale
-    data and must be retried against the new table state."""
-
-
 def _read_manifest(path: str) -> dict | None:
-    try:
-        with open(os.path.join(path, MANIFEST_FILE)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
-
-
-LOCK_FILE = ".manifest_lock"
-LOCK_STALE_SECONDS = 120.0
-LOCK_WAIT_SECONDS = 30.0
-
-
-class _publish_lock:
-    """Filesystem mutex (O_EXCL create) serializing the manifest
-    read-modify-write inside ``_publish`` — held for milliseconds, never
-    across a Spark job or the vacuum's O(n_buckets) file sweep (which runs
-    after release). A lock older than LOCK_STALE_SECONDS is treated as a
-    crash leftover and broken.
-
-    Each acquisition writes an OWNER TOKEN (uuid) into the lock file:
-
-    * breaking a stale lock goes through ``os.rename`` to a unique name —
-      an atomic claim, so when N waiters race to break the same stale lock
-      exactly one wins the rename and the losers retry; the blind-unlink
-      TOCTOU (two waiters both "break" it and both acquire) cannot happen.
-      Because the staleness probe and the rename are two steps, the claim's
-      age (mtime survives rename) is RE-CHECKED after the rename: a fresh
-      lock that replaced the stale one in that window is restored via
-      ``os.link`` (atomic, refuses to clobber a third writer's lock)
-      instead of destroyed;
-    * ``__exit__`` re-reads the file and unlinks only if it still holds
-      this acquisition's token — if another writer broke our lock (e.g. we
-      were paused past staleness) we must not release THEIR lock. Safety
-      for the paused-writer case itself comes from the per-bucket
-      optimistic conflict check in ``_publish``, not the lock.
-    """
-
-    def __init__(self, path: str):
-        self.lock_path = os.path.join(path, LOCK_FILE)
-        self.token = uuid.uuid4().hex
-
-    def __enter__(self):
-        deadline = time.time() + LOCK_WAIT_SECONDS
-        while True:
-            try:
-                fd = os.open(self.lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, f"{self.token} {os.getpid()}".encode())
-                os.close(fd)
-                return self
-            except FileExistsError:
-                try:
-                    age = time.time() - os.path.getmtime(self.lock_path)
-                except FileNotFoundError:
-                    continue
-                if age > LOCK_STALE_SECONDS:
-                    claim = f"{self.lock_path}.break-{uuid.uuid4().hex[:8]}"
-                    try:
-                        os.rename(self.lock_path, claim)
-                    except FileNotFoundError:
-                        continue  # another waiter claimed it first
-                    # the getmtime above and the rename are not atomic: the
-                    # stale lock may have been broken AND re-acquired by
-                    # another writer in between, in which case the file we
-                    # just claimed is a FRESH lock we must not destroy.
-                    # rename preserves mtime, so re-check on the claim.
-                    try:
-                        claimed_age = time.time() - os.path.getmtime(claim)
-                    except FileNotFoundError:
-                        continue
-                    if claimed_age <= LOCK_STALE_SECONDS:
-                        # stole a live lock — put it back atomically.
-                        # os.link refuses if a third writer already
-                        # re-created the path (EEXIST): then the rightful
-                        # owner's __exit__ finds a foreign token and skips
-                        # release, and write safety still rests on the
-                        # per-bucket optimistic conflict check.
-                        try:
-                            os.link(claim, self.lock_path)
-                        except FileExistsError:
-                            pass
-                        os.unlink(claim)
-                        time.sleep(0.05)
-                        continue
-                    os.unlink(claim)
-                    continue
-                if time.time() > deadline:
-                    raise TimeoutError(
-                        f"could not acquire {self.lock_path} within "
-                        f"{LOCK_WAIT_SECONDS}s"
-                    )
-                time.sleep(0.05)
-
-    def verify_owned(self) -> None:
-        """Raise ``ConcurrentWriteError`` unless the lock file still holds
-        this acquisition's token. Called immediately before the manifest
-        replace: in the (probe→rename window)² race where a waiter
-        destroys a just-re-acquired fresh lock, the dispossessed writer
-        would otherwise proceed into the manifest read-modify-write
-        concurrently with the new owner — for DISJOINT bucket sets the
-        per-bucket conflict check cannot fire and the later write would
-        silently drop the earlier one's live entries. This check shrinks
-        the unprotected window from the whole merge to the microseconds
-        between it and ``os.replace``, which a breaker cannot cross (a
-        break requires LOCK_STALE_SECONDS of age).
-
-        A MISSING lock file gets one short retry before aborting: a breaker
-        that renamed away a just-re-acquired fresh lock restores it via
-        ``os.link`` moments later, so the rightful owner can transiently
-        observe no file at all. Without the retry that window aborts a
-        healthy publish (fails closed — safe, but spurious)."""
-        owner = self._read_owner()
-        if owner is None:
-            time.sleep(0.1)  # breaker's link-restore lands within ms
-            owner = self._read_owner()
-        if owner != self.token:
-            raise ConcurrentWriteError(
-                "publish lock was broken by another writer mid-publish; "
-                "retry the upsert against the new table state"
-            )
-
-    def _read_owner(self) -> str | None:
-        try:
-            with open(self.lock_path) as f:
-                return f.read().split()[0]
-        except (FileNotFoundError, IndexError):
-            return None
-
-    def __exit__(self, *exc):
-        owner = self._read_owner()
-        if owner != self.token:
-            return  # broken/taken by another writer; not ours to release
-        try:
-            os.unlink(self.lock_path)
-        except FileNotFoundError:
-            pass
+    return M.read(path, MANIFEST_FILE)
 
 
 def _parquet_key_range(file_path: str, key: str) -> list | None:
@@ -691,8 +551,12 @@ def _delta_may_contain(rng, bloom, probe_keys) -> bool:
     return any(_bloom_contains(bloom, k) for k in in_range)
 
 
-def _snapshot_path(path: str, version: int) -> str:
-    return os.path.join(path, f"{SNAPSHOT_PREFIX}{version:08d}.json")
+def _snapshot_name(version: int) -> str:
+    return f"{SNAPSHOT_PREFIX}{version:08d}.json"
+
+
+def _read_snapshot(path: str, version: int) -> dict | None:
+    return M.read(path, _snapshot_name(version))
 
 
 def _snapshot_versions(path: str) -> list[int]:
@@ -707,6 +571,23 @@ def _snapshot_versions(path: str) -> list[int]:
     return sorted(out)
 
 
+def _check_app_meta(manifest: dict, expect: dict | None) -> None:
+    """Application-level optimistic concurrency (Delta's txn action): the
+    commit applies only if the named app-meta keys still hold the values
+    this write was computed FROM. This is what makes a change-feed fold
+    exactly-once — two folds racing from the same cursor cannot both
+    commit even when they touch DISJOINT buckets (the per-bucket check
+    can't see that conflict)."""
+    app_now = manifest.get("app", {})
+    for k, v in (expect or {}).items():
+        if app_now.get(k) != v:
+            raise ConcurrentWriteError(
+                f"app meta {k!r} is {app_now.get(k)!r}, expected {v!r}; the "
+                "state this write was computed from has been superseded — "
+                "recompute and retry"
+            )
+
+
 def _bump_version(manifest: dict, now: float) -> None:
     manifest["version"] = int(manifest.get("version", 0)) + 1
     manifest["ts"] = now
@@ -717,7 +598,7 @@ def _write_snapshot(
 ) -> None:
     """Write the version's immutable snapshot sidecar (live file set plus
     the schema the version was PUBLISHED under — garbage bookkeeping stays
-    in the current manifest). Called only AFTER ``_write_manifest`` commits
+    in the current manifest). Called only AFTER the manifest write commits
     the version: a snapshot must never exist for a version the manifest
     never reached, or time travel would serve uncommitted state (a crash or
     a broken-lock abort between a premature stamp and the manifest write
@@ -768,10 +649,7 @@ def _write_snapshot(
         snap["layout"] = {"key": layout["key"], "n_buckets": layout["n_buckets"]}
     except (FileNotFoundError, KeyError):
         pass  # legacy/plain table without a layout sidecar
-    tmp = os.path.join(path, f".snap.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        json.dump(snap, f)
-    os.replace(tmp, _snapshot_path(path, manifest["version"]))
+    M.write_atomic(path, _snapshot_name(manifest["version"]), snap)
 
 
 def _expire_snapshots(path: str) -> None:
@@ -781,7 +659,7 @@ def _expire_snapshots(path: str) -> None:
     versions for a publish that then aborts or crashes."""
     for v in _snapshot_versions(path)[: -_keep_versions()]:
         try:
-            os.unlink(_snapshot_path(path, v))
+            os.unlink(os.path.join(path, _snapshot_name(v)))
         except FileNotFoundError:
             pass
 
@@ -796,21 +674,12 @@ def _snapshot_referenced(path: str, only: set[int] | None = None) -> set[str]:
         if only is not None and v not in only:
             continue
         try:
-            with open(_snapshot_path(path, v)) as f:
-                snap = json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
+            snap = _read_snapshot(path, v)
+        except json.JSONDecodeError:
             continue
-        refs.update(f"{d}/{x}" for d, fs in snap["live"].items() for x in fs)
+        if snap is not None:
+            refs.update(f"{d}/{x}" for d, fs in snap["live"].items() for x in fs)
     return refs
-
-
-def _write_manifest(path: str, manifest: dict) -> None:
-    """Atomic replace — a reader sees the old or the new manifest, never a
-    torn one."""
-    tmp = os.path.join(path, f".{MANIFEST_FILE}.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(path, MANIFEST_FILE))
 
 
 def _bucket_dirs(path: str) -> list[str]:
@@ -831,14 +700,7 @@ def _manifest_from_listing(path: str) -> dict:
     ``write_keyed_table``'s re-initialization path the overwrite has
     already deleted them, so THAT caller captures the counter before the
     overwrite and resumes from it."""
-    live = {
-        d: sorted(
-            f
-            for f in os.listdir(os.path.join(path, d))
-            if f.endswith(".parquet")
-        )
-        for d in _bucket_dirs(path)
-    }
+    live = M.partition_files(path, BUCKET_COL)
     versions = _snapshot_versions(path)
     return {"live": live, "garbage": [], "version": max(versions, default=0)}
 
@@ -897,7 +759,7 @@ def _publish(
     milliseconds; the O(n_buckets) vacuum file sweep runs AFTER the lock
     is released (at 400k buckets an in-lock sweep would outlive
     LOCK_STALE_SECONDS and invite a legitimate-looking lock break)."""
-    with _publish_lock(path) as lk:
+    with M.lock(path) as lk:
         manifest = _read_manifest(path) or _manifest_from_listing(path)
         if based_on is not None:
             for d in affected_dirs:
@@ -906,23 +768,9 @@ def _publish(
                         f"bucket {d} was rewritten concurrently; retry the "
                         "upsert against the new table state"
                     )
-        if app_meta_expect is not None:
-            # application-level optimistic concurrency (Delta's txn action):
-            # the commit applies only if the named app-meta keys still hold
-            # the values this write was computed FROM. This is what makes a
-            # change-feed fold exactly-once — two folds racing from the same
-            # cursor cannot both commit even when they touch DISJOINT
-            # buckets (the per-bucket check above can't see that conflict).
-            # Checked before any live-tree mutation, so an abort leaves no
-            # strays.
-            app_now = manifest.get("app", {})
-            for k, v in app_meta_expect.items():
-                if app_now.get(k) != v:
-                    raise ConcurrentWriteError(
-                        f"app meta {k!r} is {app_now.get(k)!r}, expected "
-                        f"{v!r}; the state this write was computed from has "
-                        "been superseded — recompute and retry"
-                    )
+        # checked before any live-tree mutation, so an abort leaves no
+        # strays
+        _check_app_meta(manifest, app_meta_expect)
         now = time.time()
         mor_key = None
         if append_only:
@@ -1045,7 +893,7 @@ def _publish(
         # versions; the deletable list is discarded on abort too). A crash
         # between the manifest write and the unlinks leaves unreferenced
         # stray files — the stray sweep reclaims them.
-        grace = _gc_grace_seconds()
+        grace = M.gc_grace()
         retained_after = set(
             (_snapshot_versions(path) + [manifest["version"]])[-_keep_versions() :]
         )
@@ -1083,7 +931,7 @@ def _publish(
         if schema is not None:
             schema = _with_seq_field(schema, bool(manifest.get("mor")))
         lk.verify_owned()  # see verify_owned: no write with a broken lock
-        _write_manifest(path, manifest)
+        M.write_atomic(path, MANIFEST_FILE, manifest)
         # COMMIT POINT. Only now publish the version's time-travel snapshot
         # and expire displaced ones: an abort/crash above must never leave
         # a phantom snapshot (uncommitted version readable) nor have
@@ -1104,7 +952,7 @@ def _vacuum(path: str, manifest: dict, deletable: list | None = None) -> None:
     a publisher renames files in with a fresh write mtime (< grace, so the
     sweep skips them) and only retires files that are live in ``manifest``
     (so they are in the referenced set here)."""
-    grace = _gc_grace_seconds()
+    grace = M.gc_grace()
     now = time.time()
     for g in deletable or []:
         try:
@@ -1172,7 +1020,7 @@ def write_keyed_table(
     if app_meta:
         manifest["app"] = dict(app_meta)
     _bump_version(manifest, time.time())  # a fresh table's initial load is v1
-    _write_manifest(path, manifest)
+    M.write_atomic(path, MANIFEST_FILE, manifest)
     _write_snapshot(path, manifest, schema)  # post-commit, like _publish
 
 
@@ -1474,16 +1322,7 @@ def read_keyed_table(
         restrict = sorted(probe_map)
     manifest = None
     if version is not None:
-        try:
-            with open(_snapshot_path(path, version)) as f:
-                manifest = json.load(f)
-        except FileNotFoundError:
-            retained = _snapshot_versions(path)
-            raise ValueError(
-                f"version {version} is not retained at {path}; retained "
-                f"versions: {retained} (SPARK_GRAFT_SINK_KEEP_VERSIONS="
-                f"{_keep_versions()})"
-            ) from None
+        manifest = _version_manifest(path, version)
         if manifest.get("schema"):
             schema = StructType.fromJson(manifest["schema"])
         if keys is not None and manifest.get("layout") is not None:
@@ -1561,9 +1400,10 @@ def table_history(path: str) -> list[dict]:
     out = []
     for v in _snapshot_versions(path):
         try:
-            with open(_snapshot_path(path, v)) as f:
-                snap = json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
+            snap = _read_snapshot(path, v)
+        except json.JSONDecodeError:
+            continue
+        if snap is None:
             continue
         out.append(
             {
@@ -1581,15 +1421,14 @@ CHANGE_TYPE_COL = "_change_type"
 
 
 def _version_manifest(path: str, version: int) -> dict:
-    try:
-        with open(_snapshot_path(path, version)) as f:
-            return json.load(f)
-    except FileNotFoundError:
+    snap = _read_snapshot(path, version)
+    if snap is None:
         raise ValueError(
             f"version {version} is not retained at {path}; retained "
             f"versions: {_snapshot_versions(path)} "
             f"(SPARK_GRAFT_SINK_KEEP_VERSIONS={_keep_versions()})"
-        ) from None
+        )
+    return snap
 
 
 def read_changes(
@@ -1971,21 +1810,11 @@ def commit_app_meta(
     semantics as the data commits; the version records an EMPTY change
     list so feed readers skip it without opening files. No garbage
     processing here — the next data publish runs the GC pipeline."""
-    import time as _time
-
-    with _publish_lock(path) as lk:
+    with M.lock(path) as lk:
         manifest = _read_manifest(path) or _manifest_from_listing(path)
-        if app_meta_expect is not None:
-            app_now = manifest.get("app", {})
-            for k, v in app_meta_expect.items():
-                if app_now.get(k) != v:
-                    raise ConcurrentWriteError(
-                        f"app meta {k!r} is {app_now.get(k)!r}, expected "
-                        f"{v!r}; the state this commit was computed from "
-                        "has been superseded — recompute and retry"
-                    )
+        _check_app_meta(manifest, app_meta_expect)
         manifest.setdefault("app", {}).update(app_meta)
-        _bump_version(manifest, _time.time())
+        _bump_version(manifest, time.time())
         if _cdc_capture_enabled():
             manifest.setdefault("cdc", {})[str(manifest["version"])] = []
         try:
@@ -1995,7 +1824,7 @@ def commit_app_meta(
         if schema is not None:
             schema = _with_seq_field(schema, bool(manifest.get("mor")))
         lk.verify_owned()
-        _write_manifest(path, manifest)
+        M.write_atomic(path, MANIFEST_FILE, manifest)
         _write_snapshot(path, manifest, schema)
         _expire_snapshots(path)
 

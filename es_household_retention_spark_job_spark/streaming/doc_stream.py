@@ -98,20 +98,39 @@ def neardup_against_corpus(
     Scale shape: the stream side carries its own shingle hashes (computed
     in the micro-batch, no shuffle); the static side is pre-bucketed by
     band key; candidates are band-collisions only — the same
-    O(docs × bands) bound as the batch LSH path, incrementally."""
+    O(docs × bands) bound as the batch LSH path, incrementally.
+
+    ``index`` must carry ``gh`` on EVERY band row (``corpus_band_index``).
+    A persisted ``read_neardup_index`` frame stores it on one band row per
+    doc, so a collision on any other band would silently lose its pair;
+    such a row fails the query at execution instead (probe a persisted
+    index with ``neardup_probe``)."""
     bands = minhash_bands(shingle_sets(new_docs)).withColumnRenamed("gh", "gh_new")
     idx = index.select(
         F.col("doc_id").alias("dup_of"),
         F.col("gh").alias("gh_old"),
         "band_key",
     )
+    gh_old = F.col("gh_old")
     return (
         bands.join(idx, ["band_key"])
         .where(F.col("doc_id") != F.col("dup_of"))
         .select(
             "doc_id",
             "dup_of",
-            jaccard_bp(F.col("gh_new"), F.col("gh_old")).alias("jaccard_bp"),
+            F.when(
+                gh_old.isNull(),
+                F.raise_error(
+                    F.lit(
+                        "neardup_against_corpus: index band row without gh "
+                        "(a persisted near-dup index?) — probe it with "
+                        "neardup_probe, or build the index with "
+                        "corpus_band_index"
+                    )
+                ),
+            )
+            .otherwise(jaccard_bp(F.col("gh_new"), gh_old))
+            .alias("jaccard_bp"),
         )
         .where(F.col("jaccard_bp") >= min_bp)
         .dropDuplicates(["doc_id", "dup_of"])

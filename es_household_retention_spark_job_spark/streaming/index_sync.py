@@ -25,12 +25,14 @@ indexes follow the table at O(changes), never O(table)."""
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import dedup as _dedup
 from ..operators import search as _search
 from ..operators import similarity as _sim
+from ..sinks import manifest as M
 from ..sinks.upsert import CHANGE_TYPE_COL, current_version, read_changes
 
 __all__ = [
@@ -82,36 +84,21 @@ def _window(
     return int(start), int(cur)
 
 
-def _commit_text_cursor(spark, index_path: str, epoch: int, stream: str):
-    """Cursor-only manifest bump for a window the text index applies
-    nothing from — every other key carries forward unchanged."""
-    import time
-
-    man = _search._read_index_manifest(index_path)
-    if man is None:
-        man = _search._bootstrap_index_manifest(spark, index_path)
+def _commit_cursor(spark, index_path: str, kind: str, epoch: int, stream: str):
+    """Cursor-only manifest bump for a window the text or vector index
+    applies nothing from — every other key carries forward unchanged
+    (optimistic commit: a concurrent maintenance op aborts loudly rather
+    than losing it)."""
+    name, bootstrap = {
+        "text": (_search.INDEX_MANIFEST, _search._bootstrap_index_manifest),
+        "ann": (_sim.ANN_MANIFEST, _sim._bootstrap_ann_manifest),
+    }[kind]
+    man = M.read(index_path, name) or bootstrap(spark, index_path)
     new = dict(man)
-    new["version"] = int(man.get("version", 1)) + 1
-    new["retired"] = _search._roll_retired(man, time.time(), None)
+    new["retired"] = M.roll_retired(man, time.time(), None)
     new["last_epoch"] = int(epoch)
     new["epoch_stream"] = str(stream)
-    _search._write_index_manifest(index_path, new)
-
-
-def _commit_ann_cursor(spark, index_path: str, epoch: int, stream: str):
-    """The vector edition of ``_commit_text_cursor`` (optimistic commit —
-    a concurrent maintenance op aborts loudly rather than losing it)."""
-    import time
-
-    man = _sim._read_ann_manifest(index_path)
-    if man is None:
-        man = _sim._bootstrap_ann_manifest(spark, index_path)
-    new = dict(man)
-    new["version"] = int(man.get("version", 1)) + 1
-    new["retired"] = _sim._ann_roll_retired(man, time.time(), None)
-    new["last_epoch"] = int(epoch)
-    new["epoch_stream"] = str(stream)
-    _sim._commit_ann_manifest(index_path, man, new)
+    M.commit(index_path, name, new, man)
 
 
 def _split_changes(changes: DataFrame, id_col: str, cols: list[str]):
@@ -210,7 +197,7 @@ def sync_text_index(
         # nothing this index applies (empty window, or deletes of docs it
         # never indexed) — still advance the cursor, or it wedges once
         # version retention prunes `start`
-        _commit_text_cursor(spark, index_path, cur, stream)
+        _commit_cursor(spark, index_path, "text", cur, stream)
     return {
         "from": start,
         "to": cur,
@@ -276,7 +263,7 @@ def sync_ann_index(
         applied = n_deleted > 0
     if not applied:
         # cursor-only bump: see sync_text_index (the wedge guard)
-        _commit_ann_cursor(spark, index_path, cur, stream)
+        _commit_cursor(spark, index_path, "ann", cur, stream)
     n_split = 0
     if auto_split and applied:
         n_split = split_synced_ann_cells(spark, index_path, id_col=id_col)
@@ -379,11 +366,8 @@ def sync_neardup_index(
     if not n_up and not dels:
         # cursor-only bump (the wedge guard, meta edition; checked commit)
         meta = _dedup._adopt_neardup_meta(spark, index_path, id_col)
-        planned_from = dict(meta)
-        meta["version"] = int(meta["version"]) + 1
-        meta["last_epoch"] = int(cur)
-        meta["epoch_stream"] = str(stream)
-        _dedup._commit_neardup_meta(index_path, planned_from, meta)
+        new = {**meta, "last_epoch": int(cur), "epoch_stream": str(stream)}
+        M.commit(index_path, _dedup.NEARDUP_META, new, meta)
         return {"from": start, "to": cur, "deleted": 0, "upserted": 0}
     res = _dedup.upsert_neardup_docs(
         spark,
@@ -779,7 +763,7 @@ def maintain_index(
             snap.select(id_col, text_col), index_path,
             text_col=text_col, id_col=id_col,
         )
-        _commit_text_cursor(spark, index_path, cur, stream)
+        _commit_cursor(spark, index_path, "text", cur, stream)
     elif kind == "ann":
         man = _sim._read_ann_manifest(index_path)
         if n_cells is None:
@@ -794,7 +778,7 @@ def maintain_index(
             pq=bool((man or {}).get("pq")),
             pq_m=pq_params.get("m"), pq_ksub=pq_params.get("ksub"),
         )
-        _commit_ann_cursor(spark, index_path, cur, stream)
+        _commit_cursor(spark, index_path, "ann", cur, stream)
     elif kind == "neardup":
         _dedup.build_neardup_index(
             snap.select(id_col, text_col), index_path,

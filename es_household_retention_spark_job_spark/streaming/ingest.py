@@ -107,9 +107,9 @@ def apply_keyed_batch(
     import time as _time
     import uuid as _uuid
 
+    from ..sinks.manifest import LOCK_STALE_SECONDS
     from ..sinks.upsert import (
         DEFAULT_BUCKETS,
-        LOCK_STALE_SECONDS,
         ConcurrentWriteError,
         table_app_meta,
         upsert_parquet,

@@ -1104,14 +1104,16 @@ def test_ann_index_append_equals_same_centroid_build(spark, embs, tmp_path):
     before = rows(S.knn_ivf_indexed(spark, idx, queries, k=5))
 
     # crashed append: no manifest replace -> old state intact
-    real = S._write_ann_manifest
+    from es_household_retention_spark_job_spark.sinks import manifest as M
 
-    def boom(path_, manifest):
+    real = M.write_atomic
+
+    def boom(path_, name, obj):
         raise RuntimeError("injected ann commit failure")
 
     import unittest.mock as mock
 
-    with mock.patch.object(S, "_write_ann_manifest", boom):
+    with mock.patch.object(M, "write_atomic", boom):
         with _pytest.raises(RuntimeError, match="injected ann commit"):
             S.append_ann_index(delta, idx)
     assert rows(S.knn_ivf_indexed(spark, idx, queries, k=5)) == before
@@ -1301,7 +1303,9 @@ def test_knn_sq8_indexed_recall_and_pruning(spark, embs, tmp_path):
     shutil.rmtree(os.path.join(legacy, "codes"))
     m = S._read_ann_manifest(legacy)
     del m["codes"]
-    S._write_ann_manifest(legacy, m)
+    from es_household_retention_spark_job_spark.sinks import manifest as M
+
+    M.write_atomic(legacy, S.ANN_MANIFEST, m)
     with pytest.raises(ValueError, match="no SQ8 codes"):
         S.knn_sq8_indexed(spark, legacy, queries, k=5)
 
@@ -1392,7 +1396,7 @@ def test_compact_ann_index_preserves_results_with_grace(
     assert old_files <= on_disk()
 
     # expired grace -> the next commit reclaims
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_GC_GRACE", "0")
+    monkeypatch.setenv("SPARK_GRAFT_SINK_GC_GRACE", "0")
     S.append_ann_index(
         embs.where(F.col("vec_id") % 89 == 0).withColumn(
             "vec_id", F.col("vec_id") + 2000000
@@ -1597,18 +1601,20 @@ def test_ann_maintenance_concurrent_commit_detected(spark, embs, tmp_path):
     d2 = embs.where(F.col("vec_id") % 3 == 0).where(F.col("vec_id") % 2 == 1)
     S.build_ann_index(base, idx, n_cells=4, iters=2)
 
-    real_commit = S._commit_ann_manifest
+    from es_household_retention_spark_job_spark.sinks import manifest as M
+
+    real_commit = M.commit
     fired = {}
 
-    def racing_commit(path_, planned_from, new_manifest):
+    def racing_commit(path_, name, new_manifest, planned_from):
         # simulate a concurrent append landing between this op's manifest
         # read and its commit — exactly once
         if not fired.get("done"):
             fired["done"] = True
             S.append_ann_index(d2, idx)
-        return real_commit(path_, planned_from, new_manifest)
+        return real_commit(path_, name, new_manifest, planned_from)
 
-    with mock.patch.object(S, "_commit_ann_manifest", racing_commit):
+    with mock.patch.object(M, "commit", racing_commit):
         with _pytest.raises(ConcurrentWriteError, match="committed concurrently"):
             S.append_ann_index(d1, idx)
     # the RACING append's vectors are committed and searchable; the aborted

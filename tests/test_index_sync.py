@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from es_household_retention_spark_job_spark.operators import search as SE
 from es_household_retention_spark_job_spark.operators import similarity as S
+from es_household_retention_spark_job_spark.sinks import manifest as M
 from es_household_retention_spark_job_spark.sinks import upsert as U
 from es_household_retention_spark_job_spark.sources.tpch import load_table
 from es_household_retention_spark_job_spark.streaming.index_sync import (
@@ -363,7 +364,7 @@ def test_neardup_upsert_resurrects_legacy_forever_tombstone(spark, tmp_path):
     meta.pop("tombstones")
     meta.pop("sync", None)
     meta.pop("version", None)
-    D._write_neardup_meta(idx, meta)
+    M.write_atomic(idx, D.NEARDUP_META, meta)
     assert target[0] not in dup_of()  # legacy semantics: hidden
 
     # re-insert with changed text through the upsert
@@ -415,8 +416,11 @@ def test_neardup_concurrent_commit_detected(spark, tmp_path):
     assert D.delete_neardup_docs(spark, idx, dup) == 1
     # ...so the stale plan must abort loudly
     with pytest.raises(ConcurrentWriteError, match="concurrently"):
-        D._commit_neardup_meta(
-            idx, stale, {**stale, "version": int(stale["version"]) + 1}
+        M.commit(
+            idx,
+            D.NEARDUP_META,
+            {**stale, "version": int(stale["version"]) + 1},
+            stale,
         )
 
 
@@ -435,7 +439,7 @@ def test_neardup_rebuild_clamps_cursor_to_corpus_snapshot(spark, tmp_path):
     pre = D._read_neardup_meta(idx)
     pre["last_epoch"] = 9  # a sync committed AFTER the corpus was read
     pre["epoch_stream"] = "cdc:/t"
-    D._write_neardup_meta(idx, pre)
+    M.write_atomic(idx, D.NEARDUP_META, pre)
     # the corpus snapshot only absorbed epochs ≤ 7 → cursor winds back
     D.build_neardup_index(docs, idx, as_of_epoch=7)
     meta = D._read_neardup_meta(idx)
@@ -443,7 +447,7 @@ def test_neardup_rebuild_clamps_cursor_to_corpus_snapshot(spark, tmp_path):
     # a snapshot AHEAD of the live cursor never advances it (min, not set)
     pre2 = D._read_neardup_meta(idx)
     pre2["last_epoch"] = 5
-    D._write_neardup_meta(idx, pre2)
+    M.write_atomic(idx, D.NEARDUP_META, pre2)
     D.build_neardup_index(docs, idx, as_of_epoch=11)
     assert D._read_neardup_meta(idx)["last_epoch"] == 5
 
@@ -479,7 +483,7 @@ def test_neardup_rebuild_bumps_version_so_stale_racers_abort(
     pre = D._read_neardup_meta(idx)
     pre["last_epoch"] = 7  # a cursor the rebuild must carry
     pre["epoch_stream"] = "cdc:/t"
-    D._write_neardup_meta(idx, pre)
+    M.write_atomic(idx, D.NEARDUP_META, pre)
     # the racer plans from the pre-rebuild meta...
     stale = D._read_neardup_meta(idx)
     D.build_neardup_index(docs, idx)
@@ -488,10 +492,11 @@ def test_neardup_rebuild_bumps_version_so_stale_racers_abort(
     assert meta["last_epoch"] == 7 and meta["epoch_stream"] == "cdc:/t"
     # ...and must abort now that the rebuild committed a newer generation
     with pytest.raises(ConcurrentWriteError, match="concurrently"):
-        D._commit_neardup_meta(
+        M.commit(
             idx,
-            stale,
+            D.NEARDUP_META,
             {**stale, "version": int(stale["version"]) + 1},
+            stale,
         )
 
 
@@ -613,7 +618,7 @@ def test_neardup_adopt_race_does_not_clobber_committed_meta(
     committed = D._read_neardup_meta(idx)
     committed["version"] = 7  # a racer's later commit
     committed["tombstones"] = ["gen-racer-00000.parquet"]
-    D._write_neardup_meta(idx, committed)
+    M.write_atomic(idx, D.NEARDUP_META, committed)
     orig = D._read_neardup_meta
     calls = {"n": 0}
 

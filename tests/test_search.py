@@ -460,17 +460,19 @@ def test_index_append_is_reader_atomic(spark, tmp_path, monkeypatch):
     # (a) plan now, append, collect later -> old state
     pinned = SE.bm25_search_indexed(spark, idx, BM25_QUERIES, k=BM25_K)
     # (b) crashed append: fail AT the manifest replace (the commit point)
-    real_write = SE._write_index_manifest
+    from es_household_retention_spark_job_spark.sinks import manifest as M
 
-    def boom(path_, manifest):
+    real_write = M.write_atomic
+
+    def boom(path_, name, obj):
         raise RuntimeError("injected index commit failure")
 
-    monkeypatch.setattr(SE, "_write_index_manifest", boom)
+    monkeypatch.setattr(M, "write_atomic", boom)
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="injected index commit"):
         SE.append_text_index(delta, idx)
-    monkeypatch.setattr(SE, "_write_index_manifest", real_write)
+    monkeypatch.setattr(M, "write_atomic", real_write)
     assert rows(SE.bm25_search_indexed(spark, idx, BM25_QUERIES, k=BM25_K)) == want_old
 
     # (c) successful append: pinned plan still old, fresh plan merged
@@ -654,11 +656,13 @@ def test_indexed_empty_results_are_type_correct(spark, tmp_path):
 
     # crashed-append stray sweep
     delta1 = docs.where(F.col("doc_id") % 97 == 0)
-    real = SE._write_index_manifest
+    from es_household_retention_spark_job_spark.sinks import manifest as M
+
+    real = M.write_atomic
     import unittest.mock as mock
 
     with mock.patch.object(
-        SE, "_write_index_manifest", side_effect=RuntimeError("boom")
+        M, "write_atomic", side_effect=RuntimeError("boom")
     ):
         import pytest as _pytest
 
@@ -758,7 +762,7 @@ def test_compact_text_index_preserves_results_with_grace(
 
     # once the grace EXPIRES, the next commit reclaims them and the
     # expired ledger entries drop out of the manifest
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_GC_GRACE", "0")
+    monkeypatch.setenv("SPARK_GRAFT_SINK_GC_GRACE", "0")
     SE.append_text_index(
         spark.createDataFrame(
             [(999998, "another brand new document")], "doc_id long, text string"

@@ -76,12 +76,13 @@ def test_compaction_single_file_per_bucket_same_data(spark, tmp_path, monkeypatc
     # the raw append bypassed the manifest (files a manifest read must NOT
     # see); adopt them via the legacy-table bootstrap — the migration path
     # for tables written before manifests existed
+    from es_household_retention_spark_job_spark.sinks import manifest as M
     from es_household_retention_spark_job_spark.sinks.upsert import (
+        MANIFEST_FILE,
         _manifest_from_listing,
-        _write_manifest,
     )
 
-    _write_manifest(path, _manifest_from_listing(path))
+    M.write_atomic(path, MANIFEST_FILE, _manifest_from_listing(path))
     spark.catalog.refreshByPath(path)
     before = {r["k"]: r["v"] for r in read_keyed_table(spark, path).collect()}
     assert len(before) == 80
@@ -428,10 +429,10 @@ def test_lock_token_ownership_and_atomic_break(tmp_path):
     import os
     import time
 
-    from es_household_retention_spark_job_spark.sinks.upsert import (
+    from es_household_retention_spark_job_spark.sinks.manifest import (
         LOCK_FILE,
         LOCK_STALE_SECONDS,
-        _publish_lock,
+        lock as _publish_lock,
     )
 
     path = str(tmp_path)
@@ -476,9 +477,11 @@ def test_verify_owned_survives_transient_missing_lock(tmp_path):
 
     import pytest as _pt
 
+    from es_household_retention_spark_job_spark.sinks.manifest import (
+        lock as _publish_lock,
+    )
     from es_household_retention_spark_job_spark.sinks.upsert import (
         ConcurrentWriteError,
-        _publish_lock,
     )
 
     path = str(tmp_path)
@@ -518,11 +521,13 @@ def test_paused_writer_broken_lock_conflict_detected(spark, tmp_path):
     import os
     import time
 
+    from es_household_retention_spark_job_spark.sinks.manifest import (
+        LOCK_FILE,
+        lock as _publish_lock,
+    )
     from es_household_retention_spark_job_spark.sinks.upsert import (
         ConcurrentWriteError,
-        LOCK_FILE,
         _publish,
-        _publish_lock,
         _read_manifest,
     )
 
@@ -618,6 +623,7 @@ def test_vacuum_runs_outside_publish_lock(spark, tmp_path, monkeypatch):
     once the upsert returns."""
     import os
 
+    from es_household_retention_spark_job_spark.sinks import manifest as M
     from es_household_retention_spark_job_spark.sinks import upsert as U
 
     monkeypatch.setenv("SPARK_GRAFT_SINK_GC_GRACE", "0")
@@ -636,7 +642,7 @@ def test_vacuum_runs_outside_publish_lock(spark, tmp_path, monkeypatch):
     real_vacuum = U._vacuum
 
     def spy(p, manifest, deletable=None):
-        seen["lock_held"] = os.path.exists(os.path.join(p, U.LOCK_FILE))
+        seen["lock_held"] = os.path.exists(os.path.join(p, M.LOCK_FILE))
         seen["n_deletable"] = len(deletable or [])
         return real_vacuum(p, manifest, deletable)
 
@@ -780,18 +786,20 @@ def test_aborted_publish_leaves_no_phantom_snapshot(spark, tmp_path, monkeypatch
     )  # v2 — retention 2 means the NEXT publish would expire v1
     assert U._snapshot_versions(path) == [1, 2]
 
-    real_write = U._write_manifest
+    from es_household_retention_spark_job_spark.sinks import manifest as M
 
-    def boom(path_, manifest):
+    real_write = M.write_atomic
+
+    def boom(path_, name, obj):
         raise RuntimeError("injected commit failure")
 
-    monkeypatch.setattr(U, "_write_manifest", boom)
+    monkeypatch.setattr(M, "write_atomic", boom)
     with pytest.raises(RuntimeError, match="injected commit failure"):
         upsert_parquet(
             spark, path,
             spark.createDataFrame([("a", 3)], "k string, v int"), key="k",
         )
-    monkeypatch.setattr(U, "_write_manifest", real_write)
+    monkeypatch.setattr(M, "write_atomic", real_write)
 
     # no phantom v3 snapshot, no premature expiry of v1, manifest still v2
     assert U._snapshot_versions(path) == [1, 2]
@@ -847,7 +855,9 @@ def test_expired_version_files_get_post_expiry_grace(spark, tmp_path, monkeypatc
     m = U._read_manifest(path)
     for g in m["garbage"]:
         g["ts"] = time.time() - 10_000
-    U._write_manifest(path, m)
+    from es_household_retention_spark_job_spark.sinks import manifest as M
+
+    M.write_atomic(path, U.MANIFEST_FILE, m)
 
     upsert_parquet(
         spark, path, spark.createDataFrame([("a", 3)], "k string, v int"), key="k"

@@ -48,6 +48,7 @@ def main() -> None:
         clustered_embeddings,
     )
     from es_household_retention_spark_job_spark.session import get_spark
+    from es_household_retention_spark_job_spark.sinks import manifest as M
     from es_household_retention_spark_job_spark.sinks import upsert as U
     from es_household_retention_spark_job_spark.sinks.upsert import (
         ConcurrentWriteError,
@@ -154,9 +155,7 @@ def main() -> None:
     sync_ann_index(spark, ei, et)
     guard_fired = False
     try:
-        S._commit_ann_manifest(
-            ei, stale, {**stale, "version": int(stale["version"]) + 1}
-        )
+        M.commit(ei, S.ANN_MANIFEST, dict(stale), stale)
     except ConcurrentWriteError:
         guard_fired = True
     assert guard_fired, "stale planned_from committed silently"
