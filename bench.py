@@ -53,6 +53,9 @@ import statistics
 import sys
 import time
 
+#: the checkout root: this script's directory
+ROOT = os.path.dirname(os.path.abspath(__file__))
+
 BENCH_QUERIES = [
     # flagship retention pipeline (reference parity)
     "retention_phase1",
@@ -196,6 +199,12 @@ def measure_suite(
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # the Python workers import the package too: put the checkout root on
+    # their path, so the bench runs from any directory
+    paths = [ROOT] + [
+        p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p
+    ]
+    os.environ["PYTHONPATH"] = os.pathsep.join(paths)
 
     from es_household_retention_spark_job_spark.session import get_spark
 
@@ -324,7 +333,7 @@ def main() -> None:
         full_stats["git"] = (
             subprocess.check_output(
                 ["git", "rev-parse", "--short", "HEAD"],
-                cwd=os.path.dirname(os.path.abspath(__file__)),
+                cwd=ROOT,
                 stderr=subprocess.DEVNULL,
             )
             .decode()
@@ -338,7 +347,7 @@ def main() -> None:
     # artifacts (e.g. BENCH_SF1.json from the sf1 rehearsal corpus)
     local_path = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"),
+        os.path.join(ROOT, "BENCH_LOCAL.json"),
     )
     # read the COMMITTED PRIOR at this path before overwriting — it is
     # what the regression rule binds to (r12 verdict #5: the rule fired
@@ -426,11 +435,7 @@ def main() -> None:
     # round's BENCH_r{N}.json carries BOTH scales.
     if sf_val == 0.1:
         try:
-            with open(
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)), "BENCH_SF1.json"
-                )
-            ) as fh:
+            with open(os.path.join(ROOT, "BENCH_SF1.json")) as fh:
                 sf1 = json.load(fh)
             line["sf1_value"] = sf1["value"]
             line["sf1_total_min"] = sf1.get("total_min")

@@ -465,6 +465,12 @@ def check_phase2_invariant(
         persons = eligible_persons(person, client_code)
         qualifying = has_child_semi(persons, encounter, client_code, as_of)
         behind = qualifying.limit(1).count()
+    require_phase1_complete(behind)
+
+
+def require_phase1_complete(behind: int) -> None:
+    """C3's raise (HRP:786-791) on an already-computed ``behind`` count:
+    the eligible unprocessed persons that have a qualifying encounter."""
     if behind > 0:
         raise HouseholdRetentionNotReadyError(
             "households eligible for retention are available and not processed. "

@@ -224,11 +224,13 @@ def tfidf_top_terms(
     cross join — the scalar stays IN the plan (no driver round-trip)."""
     from pyspark.sql import Window
 
+    # the 1-row corpus count reads the raw frame: counting needs no
+    # round-robin shuffle
+    n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
     df = ensure_parallelism(df)
     terms = df.select(id_col, F.explode(tokens(text_col)).alias("term"))
     tf = terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     wdf = Window.partitionBy("term")
-    n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
         tf.withColumn("df", F.count(F.lit(1)).over(wdf))
         .crossJoin(F.broadcast(n_docs))

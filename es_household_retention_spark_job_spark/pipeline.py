@@ -1,11 +1,12 @@
 """Two-phase retention orchestration (HRP:126-127 ``main`` flow) over a
 keyed parquet person store.
 
-Phase 1 (HRP:305-648): guard count (C2) -> flagship pipeline -> pack nested
-history (A5) -> upsert into the person table (S7).
-Phase 2 (HRP:650-809): guard count and the phase-1-incomplete invariant
-(C3) in one action, throwing on either -> constant not-retained stamp ->
-pack -> upsert.
+Phase 1 (HRP:305-648): flagship pipeline -> pack nested history (A5),
+cached -> one guard action (C2) that also counts what phase 2's guard
+would over the store phase 1 leaves -> upsert into the person table (S7).
+Phase 2 (HRP:650-809): the phase-1-incomplete invariant (C3) on that count
+-> only if phase 1 left eligible persons: its own guard and C3 check in
+one action -> constant not-retained stamp -> pack -> upsert.
 
 Because the upsert writes ``household_retention_history``, re-running either
 phase is a no-op: processed persons now fail the P8 "unprocessed" predicate
@@ -127,30 +128,44 @@ def run_phase1(
     client_code: str,
     as_of: datetime,
     strategy: str = "window",
-) -> int:
-    """Returns the number of persons processed (0 = skipped, C2)."""
+) -> dict[str, int]:
+    """Returns the fused guard's row (``_guarded_person_count``): ``n``
+    persons processed (0 = skipped, C2), ``n2`` eligible persons phase 1
+    left unprocessed (phase 2's count over the published store) and
+    ``behind``, the C3 invariant's count among them. The guard also
+    materialises the cached phase-1 output the publish then reads, and
+    raises before any publish."""
     person, encounter = _load_inputs(spark, person_path, encounter_path)
 
     # the eligible frame R.phase1 caches: persisting the same plan here
     # makes its cache=True entry THIS one (the CacheManager keys entries by
-    # plan), so the guard count loads the cache phase 1 then reads, and the
-    # finally releases it — no entry outlives the call for every later
-    # refreshByPath on the store to re-plan
+    # plan), and the finally releases it — no entry outlives the call for
+    # every later refreshByPath on the store to re-plan
     persons = R.eligible_persons(person, client_code).persist()
+    final = R.phase1(person, encounter, client_code, as_of, strategy=strategy)
+    packed = R.pack_history(final).persist()
     try:
-        n = _guarded_person_count(persons, "phase1")["n"]  # S6 (HRP:627-628)
+        counts = _guarded_person_count(  # S6 (HRP:627-628)
+            persons,
+            "phase1",
+            processed=packed.where(
+                ~R.is_unprocessed(F.col("household_retention_history"))
+            ),
+            qualifying=R.child_encounter_persons(encounter, client_code, as_of),
+        )
+        n = counts["n"]
         log.info("phase1: %d persons without retention", n)
         if n == 0:
             log.info("phase1: nothing to process — skipping (HRP:643-645)")
-            return 0
-
-        final = R.phase1(person, encounter, client_code, as_of, strategy=strategy)
-        packed = R.pack_history(final)
+            return counts
         upsert_parquet(spark, person_path, packed, key="person_id")
     finally:
+        # leaves first: Spark's uncacheQuery recompiles every cached
+        # dependent whose cache is not loaded
+        packed.unpersist()
         persons.unpersist()
     log.info("phase1: wrote retention history for %d persons", n)
-    return n
+    return counts
 
 
 def run_phase2(
@@ -194,9 +209,21 @@ def run_retention(
     client_code: str,
     as_of: datetime,
 ) -> dict[str, int]:
-    n1 = run_phase1(spark, person_path, encounter_path, client_code, as_of)
-    n2 = run_phase2(spark, person_path, encounter_path, client_code, as_of)
-    return {"phase1_persons": n1, "phase2_persons": n2}
+    """Phase 1, then phase 2 (HRP:126-127). The C3 check runs on phase
+    1's guard counts, after phase 1 published (a failure leaves it
+    published), and ``run_phase2`` runs only when phase 1 left eligible
+    persons behind — never after a complete phase 1, whose dense month
+    grid processes every eligible person. A backfill runs four Spark
+    actions (the guard, bucket discovery, the merge write, the change
+    capture) and a re-run over a processed store one."""
+    counts = run_phase1(spark, person_path, encounter_path, client_code, as_of)
+    R.require_phase1_complete(counts["behind"])
+    n2 = (
+        run_phase2(spark, person_path, encounter_path, client_code, as_of)
+        if counts["n2"]
+        else 0
+    )
+    return {"phase1_persons": counts["n"], "phase2_persons": n2}
 
 
 def _incremental_write_mode(explicit: str | None) -> str:

@@ -67,6 +67,7 @@ import shutil
 import time
 import uuid
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -333,8 +334,9 @@ def _cdc_capture_enabled() -> bool:
     (publishes then leave no sidecar and feed windows containing them fall
     back to the state-diff tiers). Capture is WRITE-MODE-INDEPENDENT for
     merging publishes: both full-width MoR delta publishes and CoW bucket
-    rewrites record their pre/postimages — the merge materializes both
-    for free either way, so the change feed stays O(changed rows) under
+    rewrites record their pre/postimages, built by one join of the
+    updates with the update keys' rows of the merge's own target read
+    (``_upsert_changes``), so the change feed stays O(changed rows) under
     the DEFAULT ``cow`` mode too. The one deliberate exception:
     PARTIAL-column delta publishes (``_append_partial_delta``) never
     capture — there is no merge and no preimage read to piggyback on, and
@@ -1451,8 +1453,9 @@ def read_changes(
     Scale shape, three tiers. (0) WRITE-TIME CAPTURE (Delta CDF's
     ``_change_data``): EVERY publish — MoR delta append or CoW bucket
     rewrite — records its pre/postimage rows in a per-version sidecar
-    (the merge already holds both for free; deletes pay one
-    key-restricted preimage read; ``SPARK_GRAFT_SINK_CDC=off`` opts out)
+    (one join of the updates with the update keys' rows of the merge's
+    target read; deletes pay one key-restricted preimage read;
+    ``SPARK_GRAFT_SINK_CDC=off`` opts out)
     — a window whose every version captured is served by netting
     first-preimage/last-postimage per key over the sidecar rows,
     O(changed rows), no table file opened, regardless of write mode.
@@ -1732,16 +1735,36 @@ def _diff_states(before: DataFrame, after: DataFrame, key: str) -> DataFrame:
     j = _aligned(before, "_b").alias("b").join(
         _aligned(after, "_a").alias("a"), on=key, how="full_outer"
     )
-    b_row = F.struct(*[F.col(f"b.{c}").alias(c) for c in val_cols])
-    a_row = F.struct(*[F.col(f"a.{c}").alias(c) for c in val_cols])
+    return _change_rows(
+        j,
+        key,
+        {c: F.col(f"b.{c}") for c in val_cols},
+        {c: F.col(f"a.{c}") for c in val_cols},
+        before_present=F.col("b._b").isNotNull(),
+        after_present=F.col("a._a").isNotNull(),
+    )
+
+
+def _change_rows(
+    j: DataFrame, key: str, before: dict, after: dict, before_present, after_present
+) -> DataFrame:
+    """The change rows of a frame holding each key's before and after
+    image on one row: ``before``/``after`` map each value column (in
+    output order) to its expression on that side, and the ``*_present``
+    flags mark a side whose row exists (an absent row and a present
+    all-null row build the same struct). One insert or delete row per
+    one-sided key, a preimage+postimage pair per changed key, nothing for
+    an unchanged one."""
+    b_row = F.struct(*[e.alias(c) for c, e in before.items()])
+    a_row = F.struct(*[e.alias(c) for c, e in after.items()])
     entry = lambda ct, row: F.struct(  # noqa: E731
         F.lit(ct).alias(CHANGE_TYPE_COL), row.alias("_row")
     )
     return (
         j.withColumn(
             "_entries",
-            F.when(F.col("b._b").isNull(), F.array(entry("insert", a_row)))
-            .when(F.col("a._a").isNull(), F.array(entry("delete", b_row)))
+            F.when(~before_present, F.array(entry("insert", a_row)))
+            .when(~after_present, F.array(entry("delete", b_row)))
             .when(
                 ~b_row.eqNullSafe(a_row),
                 F.array(
@@ -1754,7 +1777,7 @@ def _diff_states(before: DataFrame, after: DataFrame, key: str) -> DataFrame:
         .select(key, F.explode("_entries").alias("_e"))
         .select(
             key,
-            *[F.col(f"_e._row.{c}").alias(c) for c in val_cols],
+            *[F.col(f"_e._row.{c}").alias(c) for c in before],
             F.col(f"_e.{CHANGE_TYPE_COL}").alias(CHANGE_TYPE_COL),
         )
     )
@@ -1922,8 +1945,12 @@ def upsert_parquet(
         return
     # persist the update lineage: it is consumed twice (affected-bucket
     # discovery + the merge write) and may be arbitrarily expensive (the
-    # whole phase-1 DAG, or a streaming micro-batch recompute)
-    u = _with_bucket(updates, key, n_buckets).persist()
+    # whole phase-1 DAG, or a streaming micro-batch recompute) — unless
+    # the caller already cached it, whose cache both then read
+    u = _with_bucket(updates, key, n_buckets)
+    own_cache = updates.storageLevel == StorageLevel.NONE
+    if own_cache:
+        u = u.persist()
     try:
         affected = [r[BUCKET_COL] for r in u.select(BUCKET_COL).distinct().collect()]
         if not affected:
@@ -1941,7 +1968,8 @@ def upsert_parquet(
             app_meta_expect=app_meta_expect,
         )
     finally:
-        u.unpersist()
+        if own_cache:
+            u.unpersist()
 
 
 def _commit_empty(
@@ -2047,10 +2075,7 @@ def _merge_frames(target: DataFrame, u: DataFrame, key: str) -> DataFrame:
     """The ES-upsert merge semantics as one frame: full-outer on the key;
     for matched keys, columns present in the updates replace stored
     values; unmatched updates insert (missing columns null); unmatched
-    target rows pass through bit-identical. Per-key local — which is why
-    the CDC capture below can reproduce the update-keys slice of the
-    staged output by re-running this merge on the TINY preimage frame
-    instead of re-reading the staged buckets."""
+    target rows pass through bit-identical."""
     t_cols = [c for c in target.columns if c != BUCKET_COL]
     u_cols = [c for c in u.columns if c != BUCKET_COL]
     all_cols = t_cols + [c for c in u_cols if c not in t_cols]
@@ -2072,6 +2097,37 @@ def _merge_frames(target: DataFrame, u: DataFrame, key: str) -> DataFrame:
         F.coalesce(F.col(f"u.{BUCKET_COL}"), F.col(f"t.{BUCKET_COL}")).alias(BUCKET_COL)
     )
     return merged.select(*select)
+
+
+def _upsert_changes(target: DataFrame, u: DataFrame, key: str) -> DataFrame:
+    """The change rows of ``_merge_frames(target, u, key)`` from ONE
+    ``u ⋈left target`` join: unmatched target rows pass through the merge
+    unchanged, so only update keys can change, and each one's preimage
+    (its target row, null for the columns the target lacks) and
+    postimage (the update's columns over the target's) sit on one joined
+    row. Multiset-equal to ``_diff_states(target, _merge_frames(target,
+    u, key), key)``; ``target`` may hold rows of other keys, which add no
+    change row, but a caller passes only the update keys' rows so the
+    join stays O(|updates|)."""
+    internal = (key, BUCKET_COL, SEQ_COL, TOMBSTONE_COL)
+    t_cols = [c for c in target.columns if c not in internal]
+    u_cols = [c for c in u.columns if c not in internal]
+    val_cols = sorted(set(t_cols) | set(u_cols))
+    t = target.select(key, *t_cols, F.lit(True).alias("_b"))
+    j = u.select(key, *u_cols).alias("u").join(t.alias("t"), on=key, how="left")
+    return _change_rows(
+        j,
+        key,
+        {
+            c: F.col(f"t.{c}")
+            if c in t_cols
+            else F.lit(None).cast(u.schema[c].dataType)
+            for c in val_cols
+        },
+        {c: F.col(f"u.{c}") if c in u_cols else F.col(f"t.{c}") for c in val_cols},
+        before_present=F.col("t._b").isNotNull(),
+        after_present=F.lit(True),
+    )
 
 
 def _merge_and_publish(
@@ -2133,26 +2189,23 @@ def _merge_and_publish(
         if SEQ_COL in target.columns:
             target = target.drop(SEQ_COL)
     capture = _cdc_capture_enabled()
-    pre_img = None
+    # write-time change capture is WRITE-MODE-INDEPENDENT: an upsert can
+    # only change rows whose key appears in the updates, so one
+    # ``u ⋈left pre`` join over the update keys' target rows ``pre`` holds
+    # every change (_upsert_changes). Under full-width MoR ``target`` IS
+    # that matched-rows frame, read by the merge and the capture alike:
+    # cached, O(|updates|). Under CoW ``target`` is the whole
+    # affected-bucket read, so the capture first cuts it to the update
+    # keys with a semi-join whose key side Spark can broadcast: the left
+    # join can broadcast only its target side, and joining the full read
+    # would shuffle every affected row once it outgrows the broadcast
+    # threshold.
+    pre = None
     if capture:
-        # write-time change capture is WRITE-MODE-INDEPENDENT: the merge
-        # materializes the preimages either way. Under MoR ``target`` IS
-        # the matched-rows frame; under CoW ``target`` is the full
-        # affected-bucket read the rewrite pays anyway, and the preimages
-        # are its update-key restriction (an upsert can only change rows
-        # whose key appears in the updates — unmatched rows pass through
-        # the merge bit-identical, including evolved columns, which read
-        # null before AND after under the pinned schema). Either way the
-        # captured frame is O(|updates|), cached so the sidecar diff
-        # below reads it back instead of re-reading the buckets.
-        pre_img = (
-            target
-            if mor
-            else target.join(u.select(key).distinct(), key, "left_semi")
-        )
-        pre_img = pre_img.persist()
         if mor:
-            target = pre_img
+            target = pre = target.persist()
+        else:
+            pre = target.join(u.select(key), key, "left_semi")
 
     merged = _merge_frames(target, u, key)
     if mor:
@@ -2179,23 +2232,11 @@ def _merge_and_publish(
         merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
         cdc_staged = None
         if capture:
-            # write-time change capture: preimages are the CACHED matched
-            # rows; postimages are the SAME merge re-applied to that tiny
-            # frame — per-key locality makes it provably equal to the
-            # staged output's update-keys slice, without re-reading the
-            # staged buckets (under CoW that read-back was an extra
-            # O(affected-bucket rows) scan per publish — measured +44%%
-            # on the 150M-row ladder before this). The whole capture is
-            # O(|updates|) compute + one tiny sidecar write. Stamped with
-            # this commit's version so a feed reader can net
-            # first-preimage/last-postimage per key across a window.
-            post = _merge_frames(pre_img, u, key).drop(
-                BUCKET_COL, SEQ_COL, TOMBSTONE_COL
-            )
+            # one tiny sidecar write, stamped with this commit's version
+            # so a feed reader can net first-preimage/last-postimage per
+            # key across a window
             cdc_staged = os.path.join(tmp, "__cdc_staged")
-            _diff_states(
-                pre_img.drop(BUCKET_COL, TOMBSTONE_COL), post, key
-            ).withColumn(
+            _upsert_changes(pre, u, key).withColumn(
                 CDC_VERSION_COL,
                 F.lit(int(snapshot.get("version", 0)) + 1).cast("long"),
             ).coalesce(1).write.parquet(cdc_staged)
@@ -2216,8 +2257,8 @@ def _merge_and_publish(
             cdc_staged=cdc_staged,
         )
     finally:
-        if pre_img is not None:
-            pre_img.unpersist()
+        if capture and mor:
+            pre.unpersist()
         shutil.rmtree(tmp, ignore_errors=True)
     # evolve the pinned schema AFTER the swap: updates may have introduced
     # new columns (present only in the rewritten buckets' files; the sidecar

@@ -408,6 +408,94 @@ def test_incremental_action_budget(spark, tmp_path):
     assert actions == 1
 
 
+def _spy_phase2(monkeypatch):
+    """Record every ``run_phase2`` call ``run_retention`` makes."""
+    from es_household_retention_spark_job_spark import pipeline as P
+
+    calls, real = [], P.run_phase2
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(P, "run_phase2", spy)
+    return calls
+
+
+def _drop_household(monkeypatch, household):
+    """Make phase 1 leave every member of ``household`` unprocessed."""
+    from es_household_retention_spark_job_spark.operators import retention as R
+
+    real = R.phase1
+    monkeypatch.setattr(
+        R,
+        "phase1",
+        lambda *a, **kw: real(*a, **kw).where(F.col("household") != household),
+    )
+
+
+def test_backfill_action_budget(spark, tmp_path, monkeypatch):
+    """A backfill costs at most four Spark actions — phase 1's fused
+    guard, bucket discovery, the merge write and the change-capture
+    write — and a re-run over the processed store exactly one (the
+    guard). Phase 1 processes every eligible person, so phase 2 is never
+    entered."""
+    calls = _spy_phase2(monkeypatch)
+    _, encounter = fixture_frames(spark)
+    p_path, e_path = _setup(spark, tmp_path, "bfbudget", encounter, fresh=True)
+    run = lambda: run_retention(  # noqa: E731
+        spark, p_path, e_path, FIXTURE_CLIENT, FIXTURE_AS_OF
+    )
+    stats, actions = _root_executions(spark, run)
+    assert stats == {"phase1_persons": 14, "phase2_persons": 0}
+    assert actions <= 4
+
+    stats, actions = _root_executions(spark, run)
+    assert stats == {"phase1_persons": 0, "phase2_persons": 0}
+    assert actions == 1
+    assert calls == []
+
+
+def test_backfill_runs_phase2_for_persons_phase1_left(spark, tmp_path, monkeypatch):
+    """When phase 1 leaves an eligible person without a qualifying
+    encounter unprocessed, phase 1's guard counts it for phase 2, and
+    ``run_phase2`` stamps it not-retained."""
+    calls = _spy_phase2(monkeypatch)
+    _drop_household(monkeypatch, "HH_NULLRET")
+    _, encounter = fixture_frames(spark)
+    p_path, e_path = _setup(spark, tmp_path, "bfleft", encounter, fresh=True)
+    stats = run_retention(spark, p_path, e_path, FIXTURE_CLIENT, FIXTURE_AS_OF)
+    assert stats == {"phase1_persons": 14, "phase2_persons": 1}
+    assert len(calls) == 1
+    y1 = read_keyed_table(spark, p_path).where(F.col("person_id") == "P_Y1")
+    history = y1.first()["household_retention_history"]
+    assert [e["retained"] for e in history] == [False]
+
+
+def test_backfill_c3_failure_leaves_phase1_published(spark, tmp_path, monkeypatch):
+    """When phase 1 leaves a household with a qualifying encounter behind,
+    ``run_retention`` raises the C3 error after phase 1's publish: the
+    store is exactly one version ahead, and phase 2 never runs."""
+    from es_household_retention_spark_job_spark.operators.retention import (
+        HouseholdRetentionNotReadyError,
+    )
+    from es_household_retention_spark_job_spark.sinks.upsert import (
+        current_version,
+    )
+
+    calls = _spy_phase2(monkeypatch)
+    _drop_household(monkeypatch, "HH_RUN")
+    _, encounter = fixture_frames(spark)
+    p_path, e_path = _setup(spark, tmp_path, "bfc3", encounter, fresh=True)
+    v_before = current_version(p_path)
+    with pytest.raises(HouseholdRetentionNotReadyError):
+        run_retention(spark, p_path, e_path, FIXTURE_CLIENT, FIXTURE_AS_OF)
+    assert current_version(p_path) == v_before + 1
+    assert calls == []
+    state = _state(spark, p_path)
+    assert state["P_R1"] is None and state["P_S1"] is not None
+
+
 def _cache_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 

@@ -2183,6 +2183,158 @@ def test_cow_capture_tier_under_default_mode(spark, tmp_path, monkeypatch):
     ]
 
 
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_capture_equals_merge_diff(spark, tmp_path, monkeypatch, mode):
+    """A merging publish's CDC sidecar holds exactly the rows of the state
+    diff of its merge — ``_diff_states(pre, _merge_frames(pre, u))`` over
+    the update keys' stored rows ``pre`` — as a multiset, with the same
+    column names and types. Covered: an insert, a value change, a
+    same-value update (no row), a null → value change, an update adding
+    a column, and one carrying a strict subset of the columns; under MoR
+    every checked publish merges into buckets already carrying deltas (a
+    partial one first, then full-width ones)."""
+    import os
+    from collections import Counter
+
+    from es_household_retention_spark_job_spark.sinks import upsert as U
+
+    n, path = 2, str(tmp_path / f"capture_{mode}")
+    write_keyed_table(
+        spark.createDataFrame(
+            [("a", 1, "x"), ("b", 2, "y"), ("c", 3, None), ("d", 4, "w")],
+            "k string, v int, w string",
+        ),
+        path,
+        key="k",
+        n_buckets=n,
+    )
+
+    def shape(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+    def upsert_and_check(updates, want_types):
+        pre = read_keyed_table(spark, path)
+        pre = spark.createDataFrame(pre.collect(), pre.schema)
+        upsert_parquet(spark, path, updates, key="k", n_buckets=n, mode=mode)
+        man = U._read_manifest(path)
+        files = man["cdc"][str(man["version"])]
+        got = spark.read.parquet(
+            *[os.path.join(path, U.CDC_DIR, f) for f in files]
+        ).drop(U.CDC_VERSION_COL)
+        u = U._with_bucket(updates, "k", n)
+        pre = U._with_bucket(pre, "k", n).join(u.select("k"), "k", "left_semi")
+        post = U._merge_frames(pre, u, "k").drop(U.BUCKET_COL)
+        want = U._diff_states(pre.drop(U.BUCKET_COL), post, "k")
+        assert shape(got) == shape(want)
+        assert Counter(map(tuple, got.collect())) == Counter(
+            map(tuple, want.collect())
+        )
+        assert sorted(
+            (r["k"], r[U.CHANGE_TYPE_COL]) for r in got.collect()
+        ) == sorted(want_types)
+
+    # under MoR a strict column subset lands as a partial delta (never
+    # captured): it leaves both buckets carrying one
+    upsert_parquet(
+        spark,
+        path,
+        spark.createDataFrame([("a", 1), ("b", 2), ("d", 5)], "k string, v int"),
+        key="k",
+        n_buckets=n,
+        mode=mode,
+    )
+    if mode == "mor":
+        assert len(U._read_manifest(path)["mor"]) == n
+    upsert_and_check(
+        spark.createDataFrame(
+            [
+                ("a", 10, "x", None),  # value change
+                ("b", 2, "y", None),  # same value: no row
+                ("c", 3, "z", None),  # null -> value
+                ("d", 5, "w", "e"),  # value in the new column
+                ("n", 7, None, "f"),  # insert
+            ],
+            "k string, v int, w string, extra string",
+        ),
+        [("a", "update_preimage"), ("a", "update_postimage"),
+         ("c", "update_preimage"), ("c", "update_postimage"),
+         ("d", "update_preimage"), ("d", "update_postimage"),
+         ("n", "insert")],
+    )
+    # a strict column subset through the full-width merge: the columns it
+    # lacks keep their stored values in the postimage
+    monkeypatch.setenv("SPARK_GRAFT_SINK_PARTIAL", "off")
+    upsert_and_check(
+        spark.createDataFrame(
+            [("a", None), ("c", "z"), ("m", "g")], "k string, w string"
+        ),
+        [("a", "update_preimage"), ("a", "update_postimage"),
+         ("m", "insert")],
+    )
+
+
+def test_cow_capture_shuffles_only_update_keys(spark, tmp_path):
+    """Under CoW the change capture joins the updates with only the update
+    keys' stored rows, never the whole affected-bucket read: with the store
+    above the broadcast threshold (so the capture's left join cannot
+    broadcast it), the capture's shuffles carry O(|updates|) records."""
+    import os
+
+    from es_household_retention_spark_job_spark.sinks import upsert as U
+
+    n_rows, path = 4000, str(tmp_path / "cow_capture_shuffle")
+    write_keyed_table(
+        spark.range(n_rows).select(
+            F.concat(F.lit("k"), F.col("id")).alias("k"),
+            F.sha2(F.col("id").cast("string"), 256).alias("payload"),
+        ),
+        path,
+        key="k",
+        n_buckets=4,
+    )
+    updates = spark.createDataFrame(
+        [(f"k{i * 397}", "changed") for i in range(8)] + [("new", "inserted")],
+        "k string, payload string",
+    )
+    sc = spark.sparkContext
+    status = sc._jsc.sc().statusStore()
+    sql_status = spark._jsparkSession.sharedState().statusStore()
+    conv = sc._jvm.scala.jdk.javaapi.CollectionConverters
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    # the update keys broadcast, the store (tens of KB) does not
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(8 * 1024))
+    try:
+        upsert_parquet(spark, path, updates, key="k", n_buckets=4, mode="cow")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = sql_status.executionsList()
+    capture = max(
+        (execs.apply(i) for i in range(execs.size())),
+        key=lambda e: e.executionId(),
+    )
+    q = sc._gateway.new_array(sc._gateway.jvm.double, 0)
+    records = 0
+    for job in conv.asJava(capture.jobs()).keySet():
+        for sid in sc.statusTracker().getJobInfo(int(job)).stageIds:
+            attempts = status.stageData(
+                sid, False, sc._jvm.java.util.ArrayList(), False, q
+            )
+            records += sum(
+                attempts.apply(k).shuffleWriteRecords()
+                for k in range(attempts.size())
+            )
+    assert records <= 2 * updates.count()
+    man = U._read_manifest(path)
+    got = spark.read.parquet(
+        *[
+            os.path.join(path, U.CDC_DIR, f)
+            for f in man["cdc"][str(man["version"])]
+        ]
+    )
+    assert got.count() == 2 * 8 + 1
+
+
 def test_change_feed_rejects_reversed_window(spark, tmp_path):
     """A reversed (from > to) window must raise instead of silently
     emitting an inverted diff; from == to stays the legal empty feed."""
