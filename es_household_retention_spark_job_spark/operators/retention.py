@@ -453,19 +453,15 @@ def check_phase2_invariant(
     encounter: DataFrame,
     client_code: str,
     as_of: datetime,
-    behind: int | None = None,
 ) -> None:
     """C3 — HRP:786-791: throw if any household still has an unprocessed
-    person with a qualifying encounter (phase 1 incomplete). ``behind`` is
-    that count when the caller already computed it — ``has_child_semi``'s
-    row count over its eligible frame, taken inside the pipeline's one
-    fused guard action (``pipeline._guarded_person_count``) — so the check
-    runs no action of its own."""
-    if behind is None:
-        persons = eligible_persons(person, client_code)
-        qualifying = has_child_semi(persons, encounter, client_code, as_of)
-        behind = qualifying.limit(1).count()
-    require_phase1_complete(behind)
+    person with a qualifying encounter (phase 1 incomplete), in one action
+    of its own. The pipeline takes that count from its fused guard
+    (``pipeline._guarded_person_count``) and calls
+    ``require_phase1_complete`` instead."""
+    persons = eligible_persons(person, client_code)
+    qualifying = has_child_semi(persons, encounter, client_code, as_of)
+    require_phase1_complete(qualifying.limit(1).count())
 
 
 def require_phase1_complete(behind: int) -> None:

@@ -11,12 +11,18 @@ one action -> constant not-retained stamp -> pack -> upsert.
 Because the upsert writes ``household_retention_history``, re-running either
 phase is a no-op: processed persons now fail the P8 "unprocessed" predicate
 (idempotence, tested in tests/test_upsert_pipeline.py).
+
+The backfill (``run_retention``) and CDC maintenance (``run_incremental``)
+share one phase-1 plan, ``_phase1_plan``: the backfill runs it over the
+store, the maintenance call over a staged view of the store with the
+delta-touched households' histories invalidated.
 """
 
 from __future__ import annotations
 
 import logging
 import os
+from contextlib import contextmanager
 from datetime import datetime
 
 from pyspark.sql import SparkSession
@@ -27,6 +33,8 @@ from .schemas import ENCOUNTER, PERSON, validate
 from .sinks.upsert import current_version, read_keyed_table, upsert_parquet
 
 log = logging.getLogger("retention.pipeline")
+
+HISTORY = "household_retention_history"
 
 
 def _sanitize_encounter(encounter):
@@ -121,49 +129,65 @@ def _guarded_person_count(
     return row
 
 
+@contextmanager
+def _phase1_plan(person, encounter, client_code: str, as_of: datetime, phase: str):
+    """Phase 1 (HRP:305-648) over ``person`` — the store for a backfill,
+    the staged invalidated view for a maintenance call — planned once for
+    both jobs. Yields ``(persons, packed, processed, counts)``: the cached
+    eligible frame, the cached packed histories, those marking a person
+    processed, and the fused guard's row (``_guarded_person_count``), whose
+    one action materialises both caches. The eligible frame is released
+    after the guard when no person is left for phase 2's stamps; on exit,
+    a raise included, every entry is released."""
+    # the eligible frame R.phase1 caches: persisting the same plan here
+    # makes its cache=True entry THIS one (the CacheManager keys entries by
+    # plan), so the finally releases it — no entry outlives the call for
+    # every later refreshByPath on the store to re-plan
+    persons = R.eligible_persons(person, client_code).persist()
+    packed = R.pack_history(R.phase1(person, encounter, client_code, as_of)).persist()
+    try:
+        processed = packed.where(~R.is_unprocessed(F.col(HISTORY)))
+        counts = _guarded_person_count(  # S6 (HRP:627-628)
+            persons,
+            phase,
+            processed=processed,
+            qualifying=R.child_encounter_persons(encounter, client_code, as_of),
+        )
+        if counts["n2"] == 0:
+            # the guard loaded packed's cache, which no longer reads
+            # persons: one cached plan fewer for the publish's
+            # refreshByPath to re-plan
+            persons.unpersist()
+        yield persons, packed, processed, counts
+    finally:
+        # leaves first: Spark's uncacheQuery recompiles every cached
+        # dependent whose cache is not loaded
+        packed.unpersist()
+        persons.unpersist()
+
+
 def run_phase1(
     spark: SparkSession,
     person_path: str,
     encounter_path: str,
     client_code: str,
     as_of: datetime,
-    strategy: str = "window",
 ) -> dict[str, int]:
     """Returns the fused guard's row (``_guarded_person_count``): ``n``
     persons processed (0 = skipped, C2), ``n2`` eligible persons phase 1
     left unprocessed (phase 2's count over the published store) and
-    ``behind``, the C3 invariant's count among them. The guard also
-    materialises the cached phase-1 output the publish then reads, and
-    raises before any publish."""
+    ``behind``, the C3 invariant's count among them. The guard raises
+    before any publish."""
     person, encounter = _load_inputs(spark, person_path, encounter_path)
-
-    # the eligible frame R.phase1 caches: persisting the same plan here
-    # makes its cache=True entry THIS one (the CacheManager keys entries by
-    # plan), and the finally releases it — no entry outlives the call for
-    # every later refreshByPath on the store to re-plan
-    persons = R.eligible_persons(person, client_code).persist()
-    final = R.phase1(person, encounter, client_code, as_of, strategy=strategy)
-    packed = R.pack_history(final).persist()
-    try:
-        counts = _guarded_person_count(  # S6 (HRP:627-628)
-            persons,
-            "phase1",
-            processed=packed.where(
-                ~R.is_unprocessed(F.col("household_retention_history"))
-            ),
-            qualifying=R.child_encounter_persons(encounter, client_code, as_of),
-        )
+    with _phase1_plan(person, encounter, client_code, as_of, "phase1") as (
+        _, packed, _, counts
+    ):
         n = counts["n"]
         log.info("phase1: %d persons without retention", n)
         if n == 0:
             log.info("phase1: nothing to process — skipping (HRP:643-645)")
             return counts
         upsert_parquet(spark, person_path, packed, key="person_id")
-    finally:
-        # leaves first: Spark's uncacheQuery recompiles every cached
-        # dependent whose cache is not loaded
-        packed.unpersist()
-        persons.unpersist()
     log.info("phase1: wrote retention history for %d persons", n)
     return counts
 
@@ -186,9 +210,7 @@ def run_phase2(
         "phase2",
         qualifying=R.child_encounter_persons(encounter, client_code, as_of),
     )
-    R.check_phase2_invariant(
-        person, encounter, client_code, as_of, behind=counts["behind"]
-    )
+    R.require_phase1_complete(counts["behind"])
     n = counts["n"]
     log.info("phase2: %d persons still without retention", n)
     if n == 0:
@@ -250,7 +272,6 @@ def run_incremental(
     delta_encounter,
     client_code: str,
     as_of: datetime,
-    include_new_persons: bool = False,
     app_meta: dict | None = None,
     app_meta_expect: dict | None = None,
     write_mode: str | None = None,
@@ -258,109 +279,70 @@ def run_incremental(
     """CDC maintenance: fold a batch of NEWLY-ARRIVED encounters into an
     already-processed person store without recomputing the world.
 
-    ``app_meta`` / ``app_meta_expect`` ride the single maintenance publish
-    (Delta ``txn``-style, see ``upsert_parquet``): a streaming caller
-    stores its (stream, epoch) cursor IN the maintenance commit, so a
-    replayed micro-batch is screened by the cursor and two racers from
-    the same cursor cannot both commit — the exactly-once discipline of
-    ``streaming.ingest.apply_keyed_batch`` extended to the whole
-    blast-radius → staged-phases → one-publish maintenance
-    (``streaming.retention_stream.incremental_retention_pipeline``).
-
     The reference pipeline is one-shot (processed persons fail the P8
     predicate forever, HRP:196-205); when encounters keep arriving, a
     processed household's stored history goes stale. This maintainer makes
-    the two-phase pipeline INCREMENTAL by exploiting its own idempotence
-    contract instead of adding a second compute path:
+    the two-phase pipeline incremental through its own idempotence
+    contract, running the backfill's phase-1 plan over a staged view of
+    the store instead of a second compute path:
 
-    1. *Blast radius* (delta-sized work): qualifying delta encounters →
-       their persons → those persons' households → EVERY member of those
-       households (retention is a household-level property — one member's
-       new admit can flip months for all of them).
-    2. *Invalidate — STAGED, not published*: the affected members'
-       ``household_retention_history`` is nulled in a logical view of the
-       store (one broadcast join — under ``is_unprocessed`` three-valued
-       logic a null history IS the unprocessed state), so the phase-1 P8
-       predicate selects exactly the affected members without any
-       intermediate write.
-    3. *Recompute over staged state*: phase 1 runs against the
-       invalidated view; its packed output is cached (delta-bounded) and
-       APPLIED LOGICALLY on top of the view — phase 2's eligible set
-       (invariant check included) is phase 1's minus the persons it
-       processed — so each phase reads the previous phase's staged
-       output, never the store. Nothing is counted just to
-       fill a cache: ONE fused guard action returns the phase-1 count
-       (with the person_id-unique check), the phase-2 count and the C3
-       invariant's count in one row, and in doing so materialises every
-       cached stage; a failed guard raises before any publish. The
-       phase-1 recompute over the FULL encounter history of only the
-       affected households provably equals a from-scratch run restricted
-       to them (the pipeline never joins across households). Equivalence
-       vs a full recompute is pinned in tests/test_incremental_retention.py.
+    1. *Blast radius*: qualifying delta encounters → their persons →
+       those persons' households → EVERY member of those households
+       (retention is a household-level property: one member's new admit
+       can flip months for all of them). A delta touching no household
+       returns after this one count; new-person onboarding belongs to the
+       scheduled ``run_retention``.
+    2. *Staged invalidate*: the members' ``household_retention_history``
+       is nulled in a logical view of the store (under ``is_unprocessed``'s
+       three-valued logic a null history IS the unprocessed state), so the
+       P8 predicate selects exactly the members, and no intermediate
+       write happens.
+    3. *Recompute over staged state*: phase 1 runs against that view
+       (``_phase1_plan``, the backfill's plan). Phase 2's eligible set is
+       phase 1's minus the persons it processed. ONE fused guard action
+       returns the phase-1 count (with the person_id-unique check), the
+       phase-2 count and the C3 invariant's count, and materialises every
+       cached stage; a failed guard or C3 check raises before any publish.
+       Phase 1 over the full encounter history of only the affected
+       households equals a from-scratch run restricted to them: the
+       pipeline never joins across households (pinned in
+       tests/test_incremental_retention.py).
     4. *ONE publish*: the phase-1 histories, the phase-2 not-retained
-       stamps, and (defensively) any invalidated member neither phase
-       restamped — three disjoint key sets — land in a SINGLE upsert, one
-       manifest commit. Readers see the old state or the fully-maintained
-       state, never the invalidate window or a half-recomputed store; and
-       the write floor is ONE bucket-set publish instead of the three the
-       round-9 rehearsal measured as the sf10 bottleneck (3 × ~6.5s CoW
-       publishes collapsing the 3-day-delta speedup to 1.23×). A crash
-       anywhere before the publish leaves the store byte-identical — no
-       write-ahead marker needed, because nothing was written ahead.
+       stamps, and any member neither phase restamped — three disjoint
+       key sets — land in a SINGLE upsert, one manifest commit, written
+       merge-on-read by default (``_incremental_write_mode``). Readers see
+       the old state or the fully maintained one, never the invalidate
+       window, and a crash before the publish leaves the store
+       byte-identical.
 
-    Genuinely-new (never-processed) persons ride the recompute whenever it
-    runs — the P8 predicate selects them too. When the delta touches NO
-    household, the default is to skip the recompute entirely (keeping the
-    maintainer's cost delta-proportional; new-person onboarding belongs to
-    the regularly scheduled ``run_retention``). Pass
-    ``include_new_persons=True`` to run the pipeline unconditionally —
-    every otherwise-equivalent delta then gets identical new-person
-    behavior, at the cost of an O(store) eligibility scan even for an
-    empty delta.
-
-    Note the deliberate contrast with the one-shot gate: a delta-touched
-    household is recomputed EVEN IF previously processed — staleness from
-    new data is exactly what this maintainer exists to repair — while
+    A delta-touched household is recomputed EVEN IF previously processed
+    (staleness from new data is what this maintainer repairs), while
     untouched processed households keep the one-shot "never reprocess"
     contract.
 
     ``delta_encounter``: DataFrame of the new encounter rows. They must
     ALREADY be part of the store at ``encounter_path`` (ingest appends
-    first, then calls this) — the delta frame is only used to compute the
-    blast radius, never as the recompute input.
+    first, then calls this); the delta only computes the blast radius,
+    never the recompute input.
 
-    Scale shape: step 1 is one delta-scan + two semi-joins that broadcast
-    when the delta is small (the common CDC case — AQE picks the
-    strategy from the delta's actual size); step 2 touches only the
-    affected members' buckets; step 3's phase-1 joins prune the full
-    encounter scan to affected persons through the join itself. A daily
-    0.1% delta therefore costs ~0.1% of the backfill, not a rescan. At
-    that size the call is bound by per-action driver cost, not compute,
-    so with its default MoR publish it runs exactly THREE driver actions
-    for a non-empty delta: the blast-radius count (alone, so an empty
-    delta exits after one), the fused guard, and the partial-column
-    append's staged write, its only action (pinned in
-    tests/test_incremental_retention.py).
+    ``app_meta`` / ``app_meta_expect`` ride the publish (Delta
+    ``txn``-style, see ``upsert_parquet``): a streaming caller stores its
+    (stream, epoch) cursor IN the maintenance commit, so a replayed
+    micro-batch is screened by the cursor and two racers from the same
+    cursor cannot both commit
+    (``streaming.retention_stream.incremental_retention_pipeline``).
 
-    The WRITE side is the store's trade to make: under the default
-    copy-on-write sink any realistic affected-key set hashes into every
-    bucket, so the single upsert rewrites the affected buckets once — an
-    O(store) cost paid ONCE per maintenance call (round 9 paid it three
-    times: write-ahead invalidate + phase-1 + phase-2 publishes, the
-    measured sf10 floor). Set ``SPARK_GRAFT_SINK_WRITE_MODE=mor`` to land
-    it as per-bucket delta appends (O(delta) write; reads reconcile per
-    key until the next ``compact_keyed_table``) — state-identical to the
-    CoW run, pinned in tests/test_incremental_retention.py.
+    Cost: the blast radius is one delta scan and two semi-joins that
+    broadcast for a small delta, and phase 1's joins prune the encounter
+    scan to the affected persons, so a 0.1% delta costs ~0.1% of the
+    backfill's compute. At that size per-action driver cost dominates: a
+    non-empty delta runs exactly three actions (the blast-radius count,
+    the fused guard, the merge-on-read append), an empty one runs one.
 
-    **Maintenance-invisible reads.** The returned ``pre_version`` is the
-    person table's committed version BEFORE the maintenance publish: a
-    reader pinned via ``read_keyed_table(spark, person_path,
-    version=pre_version)`` sees the exact pre-maintenance table (pinned in
-    tests/test_incremental_retention.py) — and since round 10 even the
-    UNPINNED reader never observes a transient state, because the whole
-    maintenance is one commit. The pin stays readable while the version
-    is retained (``SPARK_GRAFT_SINK_KEEP_VERSIONS``; one incremental
-    publishes exactly 1 new version).
+    The returned ``pre_version`` is the person table's committed version
+    before the publish: ``read_keyed_table(spark, person_path,
+    version=pre_version)`` reads the exact pre-maintenance table while
+    that version is retained (``SPARK_GRAFT_SINK_KEEP_VERSIONS``).
 
     Returns ``{"affected_persons", "phase1_persons", "phase2_persons",
     "pre_version"}``.
@@ -398,11 +380,10 @@ def run_incremental(
         .select("person_id")
     )
     members = members.persist()
-    cached = [members]
     try:
         n_affected = members.count()
         log.info("incremental: %d persons in touched households", n_affected)
-        if n_affected == 0 and not include_new_persons:
+        if n_affected == 0:
             log.info("incremental: no qualifying delta — skipping")
             return {
                 "affected_persons": 0,
@@ -411,126 +392,70 @@ def run_incremental(
                 "pre_version": pre_version,
             }
 
-        hist = "household_retention_history"
-        history_type = person.schema[hist].dataType
-        if n_affected:
-            # 2. STAGED invalidate: null history == unprocessed (P8
-            # three-valued logic) — a logical view, nothing published. The
-            # member set is delta-bounded in the common CDC case, so AQE
-            # turns the marker join into a broadcast; a huge blast radius
-            # degrades to a shuffle join instead of an OOM'd forced
-            # broadcast.
-            marked = members.withColumn("_invalidated", F.lit(True))
-            person_work = (
-                person.join(marked, "person_id", "left")
-                .withColumn(
-                    hist,
-                    F.when(
-                        F.col("_invalidated"), F.lit(None).cast(history_type)
-                    ).otherwise(F.col(hist)),
-                )
-                .drop("_invalidated")
+        # 2. STAGED invalidate — a logical view, nothing published. The
+        # member set is delta-bounded in the common CDC case, so AQE turns
+        # the marker join into a broadcast; a huge blast radius degrades
+        # to a shuffle join instead of an OOM'd forced broadcast.
+        history_type = person.schema[HISTORY].dataType
+        marked = members.withColumn("_invalidated", F.lit(True))
+        person_work = (
+            person.join(marked, "person_id", "left")
+            .withColumn(
+                HISTORY,
+                F.when(
+                    F.col("_invalidated"), F.lit(None).cast(history_type)
+                ).otherwise(F.col(HISTORY)),
             )
-        else:
-            log.info(
-                "incremental: no qualifying delta — running the pipeline "
-                "for genuinely-new persons (include_new_persons=True)"
-            )
-            person_work = person
-
+            .drop("_invalidated")
+        )
         encounter = _sanitize_encounter(spark.read.parquet(encounter_path))
         validate(encounter, ENCOUNTER, allow_extra=True)
 
-        # 3. both phases over staged state, planned lazily; ONE guard
-        # action then materialises the cached stages. Phase 1 runs against
-        # the invalidated view. Phase 2's eligible set is the store after
-        # phase 1: phase 1's eligible persons minus those its histories
-        # mark processed — eligible_persons over the view with phase 1's
-        # output applied on top, without joining that store-wide view
-        # again (one history row per person: the guard checks person_id
-        # uniqueness). A persisted frame is materialised by its first
-        # consumer, so no step counts a frame just to fill its cache.
-        persons1 = R.eligible_persons(person_work, client_code).persist()
-        cached.append(persons1)
-        encounters = R.eligible_encounters(encounter, client_code, as_of)
-        admits = R.person_encounter_admits(persons1, encounters)
-        base = R.retention_base(
-            persons1, R.retained_months(admits), R.month_grid(spark, as_of)
-        )
-        final1 = R.fan_out_to_persons(R.collapse_retention(base, as_of), persons1)
-        packed1 = R.pack_history(final1).persist()
-        cached.append(packed1)
-        processed1 = packed1.where(~R.is_unprocessed(F.col(hist)))
+        # 3. phase 1 over the view; phase 2's eligible set is phase 1's
+        # minus the persons its histories mark processed, without joining
+        # the store-wide view again (one history row per person: the
+        # guard checks person_id uniqueness)
+        with _phase1_plan(
+            person_work, encounter, client_code, as_of, "incremental/phase1"
+        ) as (persons1, packed1, processed1, counts):
+            R.require_phase1_complete(counts["behind"])
+            n1, n2 = counts["n"], counts["n2"]
+            log.info("incremental: %d persons without retention (phase 1)", n1)
+            log.info("incremental: %d persons stamped not-retained (phase 2)", n2)
 
-        # the fused guard: n1 + the person_id-unique check, n2, and the C3
-        # invariant's "behind" count (over phase 2's eligible set) in one
-        # row. Raising here leaves the store byte-identical: nothing has
-        # been published.
-        counts = _guarded_person_count(
-            persons1,
-            "incremental/phase1",
-            processed=processed1,
-            qualifying=R.child_encounter_persons(encounter, client_code, as_of),
-        )
-        R.check_phase2_invariant(
-            person_work, encounter, client_code, as_of, behind=counts["behind"]
-        )
-        n1, n2 = counts["n"], counts["n2"]
-        log.info("incremental: %d persons without retention (phase 1)", n1)
-        log.info("incremental: %d persons stamped not-retained (phase 2)", n2)
-        stats = {
+            # 4. ONE publish: phase-1 histories ∪ phase-2 stamps ∪
+            # leftover invalidations (members neither phase restamped —
+            # empty by construction, kept for exact equivalence with a
+            # sequential invalidate-then-recompute). The three key sets
+            # are disjoint: phase 2 only selects persons phase 1 left
+            # unprocessed, and the leftover anti-joins both.
+            delta_out = packed1
+            if n2:
+                persons2 = persons1.join(
+                    processed1.select("person_id"), "person_id", "left_anti"
+                )
+                delta_out = delta_out.unionByName(
+                    R.pack_history(R.phase2(persons2, as_of))
+                )
+            leftover = members.join(
+                delta_out.select("person_id"), "person_id", "left_anti"
+            ).select("person_id", F.lit(None).cast(history_type).alias(HISTORY))
+            delta_out = delta_out.unionByName(leftover)
+            upsert_parquet(
+                spark,
+                person_path,
+                delta_out,
+                key="person_id",
+                app_meta=app_meta,
+                app_meta_expect=app_meta_expect,
+                mode=_incremental_write_mode(write_mode),
+            )
+        log.info("incremental: published one maintenance commit")
+        return {
             "affected_persons": n_affected,
             "pre_version": pre_version,
             "phase1_persons": n1,
             "phase2_persons": n2,
         }
-        if not (n_affected or n1 or n2):
-            log.info("incremental: nothing to publish")
-            return stats
-
-        # 4. ONE publish: phase-1 histories ∪ phase-2 stamps ∪ leftover
-        # invalidations (members neither phase restamped — empty by
-        # construction, kept for exact equivalence with a sequential
-        # invalidate-then-recompute). The three key sets are disjoint:
-        # phase 2 only selects persons phase 1 left unprocessed, and the
-        # leftover anti-joins both.
-        parts = [packed1] if n1 else []
-        if n2:
-            persons2 = persons1.join(
-                processed1.select("person_id"), "person_id", "left_anti"
-            )
-            parts.append(R.pack_history(R.phase2(persons2, as_of)))
-        if n_affected:
-            restamped = members.where(F.lit(False)).select("person_id")
-            for p in parts:
-                restamped = restamped.unionByName(p.select("person_id"))
-            leftover = members.join(restamped, "person_id", "left_anti").select(
-                "person_id", F.lit(None).cast(history_type).alias(hist)
-            )
-            parts.append(leftover)
-        delta_out = parts[0]
-        for p in parts[1:]:
-            delta_out = delta_out.unionByName(p)
-        # the guard loaded every cache, so the publish reads packed1 and
-        # members from theirs and persons1 only through phase-2 stamps:
-        # without stamps, release it now, so the publish's refreshByPath
-        # has one cached plan fewer to re-plan
-        if not n2:
-            persons1.unpersist()
-            cached.remove(persons1)
-        upsert_parquet(
-            spark,
-            person_path,
-            delta_out,
-            key="person_id",
-            app_meta=app_meta,
-            app_meta_expect=app_meta_expect,
-            mode=_incremental_write_mode(write_mode),
-        )
-        log.info("incremental: published one maintenance commit")
-        return stats
     finally:
-        # leaves first: Spark's uncacheQuery recompiles every cached
-        # dependent whose cache is not loaded
-        for df_ in reversed(cached):
-            df_.unpersist()
+        members.unpersist()

@@ -196,10 +196,9 @@ def test_incremental_pinned_reader_never_sees_maintenance(spark, tmp_path):
 
 
 def test_incremental_include_new_persons(spark, tmp_path):
-    """include_new_persons=True runs the idempotent pipeline even when the
-    delta touches no household, onboarding genuinely-new unprocessed
-    persons; the default keeps the empty-delta call delta-proportional
-    (skips them — the scheduled run_retention's job)."""
+    """An empty delta keeps the maintenance call delta-proportional: it
+    skips a genuinely-new unprocessed person, and the scheduled
+    run_retention onboards it."""
     _, encounter = fixture_frames(spark)
     p_path, e_path = _setup(spark, tmp_path, "newp", encounter)
     run_retention(spark, p_path, e_path, FIXTURE_CLIENT, FIXTURE_AS_OF)
@@ -220,19 +219,10 @@ def test_incremental_include_new_persons(spark, tmp_path):
     stats = run_incremental(
         spark, p_path, e_path, empty_delta, FIXTURE_CLIENT, FIXTURE_AS_OF
     )
-    assert stats["phase1_persons"] == 0  # default: delta-proportional skip
+    assert stats["phase1_persons"] == 0  # delta-proportional skip
     assert _state(spark, p_path)["P_NEW"] is None
 
-    stats = run_incremental(
-        spark,
-        p_path,
-        e_path,
-        empty_delta,
-        FIXTURE_CLIENT,
-        FIXTURE_AS_OF,
-        include_new_persons=True,
-    )
-    assert stats["affected_persons"] == 0
+    stats = run_retention(spark, p_path, e_path, FIXTURE_CLIENT, FIXTURE_AS_OF)
     assert stats["phase1_persons"] == 1  # P_NEW onboarded
     assert _state(spark, p_path)["P_NEW"] is not None
 
@@ -494,6 +484,28 @@ def test_backfill_c3_failure_leaves_phase1_published(spark, tmp_path, monkeypatc
     assert calls == []
     state = _state(spark, p_path)
     assert state["P_R1"] is None and state["P_S1"] is not None
+
+
+def test_incremental_shares_phase1_plan(spark, tmp_path, monkeypatch):
+    """Maintenance plans phase 1 through the backfill's ``R.phase1``: a
+    phase 1 that leaves every household behind fails the C3 check before
+    the publish, and the store's version does not move."""
+    from es_household_retention_spark_job_spark.operators import retention as R
+    from es_household_retention_spark_job_spark.sinks.upsert import (
+        current_version,
+    )
+
+    p_path, e_path, delta, _ = _cdc_store(spark, tmp_path, "shared")
+    real = R.phase1
+    monkeypatch.setattr(
+        R, "phase1", lambda *a, **kw: real(*a, **kw).where(F.lit(False))
+    )
+    v_before = current_version(p_path)
+    with pytest.raises(R.HouseholdRetentionNotReadyError):
+        run_incremental(
+            spark, p_path, e_path, delta, FIXTURE_CLIENT, FIXTURE_AS_OF
+        )
+    assert current_version(p_path) == v_before
 
 
 def _cache_empty(spark) -> bool:

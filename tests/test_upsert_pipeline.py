@@ -11,7 +11,6 @@ from es_household_retention_spark_job_spark.operators.retention import (
     HouseholdRetentionNotReadyError,
 )
 from es_household_retention_spark_job_spark.pipeline import (
-    run_phase1,
     run_phase2,
     run_retention,
 )
