@@ -49,6 +49,7 @@ from __future__ import annotations
 
 import json
 import os
+import platform
 import statistics
 import sys
 import time
@@ -165,6 +166,58 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+#: what a prior artifact must share with this run before their totals are
+#: compared: a 4-core host against a 32-core artifact measures the hosts
+COMPARABLE_ON = ("host", "nproc", "reps", "sf")
+
+
+def regression_verdict(full_stats: dict, prior: dict) -> dict | None:
+    """Adjudicate ``full_stats`` against the committed ``prior`` artifact
+    (None when the prior has no ``total_min``). A verdict is given only
+    when the prior matches on every ``COMPARABLE_ON`` field; otherwise it
+    is ``not_comparable`` and ``mismatched`` names the fields."""
+    total_min = full_stats.get("total_min")
+    if not (prior and prior.get("total_min") and total_min):
+        return None
+    out = {
+        "binds_to": "the committed prior artifact at this path",
+        "prior_git": prior.get("git"),
+        "prior_total_min": prior["total_min"],
+    }
+    mismatched = [
+        k for k in COMPARABLE_ON if prior.get(k) != full_stats.get(k)
+    ]
+    if mismatched:
+        return {
+            **out,
+            "total_min_delta_pct": None,
+            "mismatched": mismatched,
+            "verdict": "not_comparable",
+        }
+    delta_pct = round(100 * (total_min / prior["total_min"] - 1), 1)
+    spreads = [
+        s
+        for s in (
+            full_stats.get("total_spread_trimmed_pct"),
+            prior.get("total_spread_trimmed_pct"),
+        )
+        if s is not None
+    ]
+    noise = max(spreads) if spreads else 0.0
+    if delta_pct > 10 and delta_pct > noise:
+        verdict = "regression"
+    elif delta_pct > 10:
+        verdict = "within_noise"  # >10% but inside either run's spread
+    else:
+        verdict = "ok"
+    return {
+        **out,
+        "total_min_delta_pct": delta_pct,
+        "noise_floor_pct": noise,
+        "verdict": verdict,
+    }
+
+
 def measure_suite(
     runners: dict[str, object], reps: int, warmup: int = WARMUP_PASSES
 ) -> tuple[dict[str, dict[str, float]], list[float]]:
@@ -272,6 +325,8 @@ def main() -> None:
         "queries": timings,
         "sf": sf_val,
         "reps": REPS,
+        "host": platform.node(),
+        "nproc": len(os.sched_getaffinity(0)),
         "warmup_passes": WARMUP_PASSES,
         "estimator": "median",
         "total_min": total_min,
@@ -281,8 +336,9 @@ def main() -> None:
         # min-of-reps moves >10% (the sf1 gate's effective rule)
         "regression_rule": (
             "flag only if total_min moves >10% vs the COMMITTED prior "
-            "artifact at this path AND past both runs' trimmed spread "
-            "(self-adjudicated in regression_verdict)"
+            "artifact at this path AND past both runs' trimmed spread; "
+            "not_comparable unless the prior shares host, nproc, reps "
+            "and sf (self-adjudicated in regression_verdict)"
         ),
         "pass_totals": pass_totals,
         "total_spread_pct": round(
@@ -366,36 +422,9 @@ def main() -> None:
         for k in ("ab_same_window",):
             if k in prior and k not in full_stats:
                 full_stats[k] = prior[k]
-    if (
-        prior
-        and prior.get("total_min")
-        and total_min
-        and prior.get("sf") == sf_val  # only like-for-like scales adjudicate
-    ):
-        delta_pct = round(100 * (total_min / prior["total_min"] - 1), 1)
-        spreads = [
-            s
-            for s in (
-                full_stats.get("total_spread_trimmed_pct"),
-                prior.get("total_spread_trimmed_pct"),
-            )
-            if s is not None
-        ]
-        noise = max(spreads) if spreads else 0.0
-        if delta_pct > 10 and delta_pct > noise:
-            verdict = "regression"
-        elif delta_pct > 10:
-            verdict = "within_noise"  # >10% but inside either run's spread
-        else:
-            verdict = "ok"
-        full_stats["regression_verdict"] = {
-            "binds_to": "the committed prior artifact at this path",
-            "prior_git": prior.get("git"),
-            "prior_total_min": prior["total_min"],
-            "total_min_delta_pct": delta_pct,
-            "noise_floor_pct": noise,
-            "verdict": verdict,
-        }
+    rv = regression_verdict(full_stats, prior)
+    if rv:
+        full_stats["regression_verdict"] = rv
     with open(local_path, "w") as fh:
         json.dump(full_stats, fh, indent=1)
         fh.write("\n")
@@ -419,7 +448,6 @@ def main() -> None:
         "total_spread_pct": full_stats["total_spread_pct"],
         "total_spread_trimmed_pct": full_stats["total_spread_trimmed_pct"],
     }
-    rv = full_stats.get("regression_verdict")
     if rv:
         # the printed line (archived as BENCH_r{N}.json) carries the
         # self-adjudication so the rule never again fires ambiguously

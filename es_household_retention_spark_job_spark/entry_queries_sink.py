@@ -262,7 +262,7 @@ def sink_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point lookup (sinks/upsert.py::read_keyed_table(keys=...)) against
     the MoR-dirty current state: only the buckets the probe keys hash to
     are opened (manifest-level pruning pinned in test_upsert_pipeline),
-    and the reconciliation window runs only over those buckets' deltas.
+    and the reconciliation fold runs only over those buckets' rows.
     Probe = every source key divisible by 97; deleted keys must be absent,
     updated keys must serve the post-update value."""
     from .sinks.upsert import read_keyed_table

@@ -2015,7 +2015,8 @@ def upsert_text_docs(
     if len(up_ids) != len(set(up_ids)):
         raise ValueError(
             "upsert_text_docs: batch carries duplicate ids — resolve to "
-            "one row per id upstream (the keyed sink's _resolve contract)"
+            "one row per id upstream (the keyed sink's key-distinct upsert "
+            "contract)"
         )
     delete_ids = sorted(set(delete_ids or []))
     overlap = set(delete_ids) & set(up_ids)

@@ -3529,8 +3529,8 @@ def upsert_ann_vectors(
         if len(delta_ids) != len(set(delta_ids)):
             raise ValueError(
                 "upsert_ann_vectors: delta carries duplicate ids — resolve "
-                "to one row per id upstream (the keyed sink's _resolve "
-                "contract)"
+                "to one row per id upstream (the keyed sink's key-distinct "
+                "upsert contract)"
             )
         # delete_ids ride the SAME commit (the CDC-sync shape): their old
         # rows make their cells rewrite targets exactly like replaced

@@ -248,8 +248,8 @@ def run_retention(
     return {"phase1_persons": counts["n"], "phase2_persons": n2}
 
 
-def _incremental_write_mode(explicit: str | None) -> str:
-    """The flagship maintenance loop's write mode: explicit argument >
+def _incremental_write_mode() -> str:
+    """The flagship maintenance loop's write mode:
     ``SPARK_GRAFT_SINK_WRITE_MODE`` env override > **``mor``** (the
     round-12 default). MoR is the default HERE — and only here — because
     this loop's publish is the measured write floor: under CoW any
@@ -259,8 +259,6 @@ def _incremental_write_mode(explicit: str | None) -> str:
     measured 2.11× at sf10/3d (SCALING.md). ``cow`` remains the GLOBAL
     sink default — the read-optimized choice for tables whose consumers
     scan more than they maintain."""
-    if explicit is not None:
-        return explicit
     env = os.environ.get("SPARK_GRAFT_SINK_WRITE_MODE")
     return env if env is not None else "mor"
 
@@ -274,7 +272,6 @@ def run_incremental(
     as_of: datetime,
     app_meta: dict | None = None,
     app_meta_expect: dict | None = None,
-    write_mode: str | None = None,
 ) -> dict[str, int]:
     """CDC maintenance: fold a batch of NEWLY-ARRIVED encounters into an
     already-processed person store without recomputing the world.
@@ -448,7 +445,7 @@ def run_incremental(
                 key="person_id",
                 app_meta=app_meta,
                 app_meta_expect=app_meta_expect,
-                mode=_incremental_write_mode(write_mode),
+                mode=_incremental_write_mode(),
             )
         log.info("incremental: published one maintenance commit")
         return {

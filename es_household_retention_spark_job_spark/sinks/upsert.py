@@ -89,9 +89,9 @@ SEQ_COL = "_seq"
 
 #: delete tombstone: a MoR delete appends delta rows carrying only
 #: (key, _seq, _tombstone=true); when such a row is a key's latest by
-#: ``_seq``, the key is dead — filtered by ``_resolve`` at read time and
-#: physically dropped at the next compaction / CoW rewrite of its bucket
-#: (the Hudi-delete / Delta-deletion-vector shape). Null = live.
+#: ``_seq``, the key is dead — filtered by ``_fold_resolve`` at read time
+#: and physically dropped at the next compaction / CoW rewrite of its
+#: bucket (the Hudi-delete / Delta-deletion-vector shape). Null = live.
 TOMBSTONE_COL = "_tombstone"
 
 RESERVED_COLS = (SEQ_COL, TOMBSTONE_COL, BUCKET_COL)
@@ -105,34 +105,6 @@ RESERVED_COLS = (SEQ_COL, TOMBSTONE_COL, BUCKET_COL)
 #: distinguishes "column absent from this update" from "column set to
 #: null" under the pinned-schema read (both scan back as null).
 MASK_COL = "_mask"
-
-
-def _partial_deltas_enabled() -> bool:
-    """``SPARK_GRAFT_SINK_PARTIAL=off`` disables partial-column MoR deltas
-    (upserts whose updates carry a strict subset of the stored columns
-    then take the full-width merge path, as in rounds ≤10). Default ON:
-    a subset-column upsert under ``mor`` appends delta rows carrying ONLY
-    the updated columns and NEVER READS THE BASE ROWS — the publish is
-    O(delta bytes) in both I/O and compute, independent of store size
-    (the Delta/Hudi partial-update shape; the r10 verdict's named lever
-    on the incremental-retention write floor). Read-side, ``_resolve``
-    generalizes to a per-COLUMN latest-writer fold over (base ∪ deltas).
-
-    The documented trade: a partial publish records no write-time CDC
-    sidecar (capture would force the very matched-preimage read this
-    path exists to delete); change-feed windows containing one are served
-    by the partial-aware append fast path instead — still O(changed keys)
-    reads, paid by feed READERS per window instead of by every publish."""
-    return os.environ.get("SPARK_GRAFT_SINK_PARTIAL", "on") != "off"
-
-
-def _dirty_has_partial(manifest: dict, dirty_dirs) -> bool:
-    """True iff any of the given bucket dirs carries a PARTIAL delta file
-    (per the manifest's ``mor_cols`` ledger) — the read-side switch
-    between the full-row supersession window (cheaper, pre-round-11
-    semantics) and the per-column fold."""
-    mc = manifest.get("mor_cols") or {}
-    return any(mc.get(d) for d in dirty_dirs)
 
 
 def _read_files_masked(
@@ -184,9 +156,11 @@ def _read_files_masked(
 
 
 def _fold_resolve(df: DataFrame, key: str) -> DataFrame:
-    """Per-COLUMN merge-on-read reconciliation — ``_resolve`` generalized
-    to partial deltas. Input rows carry ``_seq`` (null = base, oldest),
-    ``_tombstone`` and ``_mask`` (see MASK_COL); per key:
+    """THE merge-on-read reconciliation: every read, merge target and
+    compaction of delta-carrying rows goes through this per-COLUMN fold.
+    Input rows carry ``_seq`` (null = base, oldest), ``_tombstone`` and
+    ``_mask`` (see MASK_COL; a null or absent mask carries every column —
+    base rows and full-width deltas); per key:
 
     * ``_ts`` = the latest tombstone's sequence (the key's state before
       and at ``_ts`` is dead — a later partial delta re-INSERTS the key
@@ -196,12 +170,11 @@ def _fold_resolve(df: DataFrame, key: str) -> DataFrame:
       row is newer than ``_ts`` — otherwise the column is null;
     * the key survives iff any live row is newer than ``_ts``.
 
-    One hash aggregation on the key — same shuffle count as the window
-    in ``_resolve``, applied only to delta-carrying buckets. Duplicate
-    keys WITHIN one publish tie on ``_seq`` and may resolve per-column
-    nondeterministically (the full-width path picks an arbitrary whole
-    row under the same caller error); as everywhere in the sink, an
-    upsert batch must be key-distinct."""
+    For full-width rows this is "the key's latest row wins, a latest
+    tombstone deletes it". One hash aggregation on the key, applied only
+    to delta-carrying buckets. Duplicate keys WITHIN one publish tie on
+    ``_seq`` and may resolve per-column nondeterministically; as
+    everywhere in the sink, an upsert batch must be key-distinct."""
     val_cols = [
         c
         for c in df.columns
@@ -254,7 +227,7 @@ def _sink_write_mode(override: str | None = None) -> str:
     write from O(affected-bucket rows) to O(delta rows) — the CDC write
     floor the sf10 rehearsal measured (SCALING.md round 9: any realistic
     blast radius touches every bucket, so CoW pays a full store rewrite
-    per upsert) — at the price of a per-key window on reads until the
+    per upsert) — at the price of a per-key fold on reads until the
     next compaction. The Hudi-MoR / Delta-deletion-vector trade, on this
     sink's existing manifest (multi-file buckets + compaction were
     already the layout's maintenance story).
@@ -296,29 +269,6 @@ def _with_seq_field(schema: StructType, present: bool) -> StructType:
     if any(f.name == BUCKET_COL for f in schema.fields):
         fields.append(StructField(BUCKET_COL, LongType(), True))
     return StructType(fields)
-
-
-def _resolve(df: DataFrame, key: str) -> DataFrame:
-    """Merge-on-read reconciliation: keep each key's highest-``_seq`` row
-    (null = base/CoW rows, oldest), then drop keys whose winning row is a
-    delete tombstone. No-op for tables that never took a MoR delta (no
-    ``_seq`` column → no window, plans unchanged). Returns rows with
-    ``_seq`` retained (callers drop it) and ``_tombstone`` consumed."""
-    if SEQ_COL not in df.columns:
-        return df
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(key).orderBy(F.col(SEQ_COL).desc_nulls_last())
-    out = (
-        df.withColumn("_mor_rn", F.row_number().over(w))
-        .where(F.col("_mor_rn") == 1)
-        .drop("_mor_rn")
-    )
-    if TOMBSTONE_COL in out.columns:
-        out = out.where(
-            ~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
-        ).drop(TOMBSTONE_COL)
-    return out
 
 
 #: per-row version stamp inside CDC sidecar files (which publish captured
@@ -728,7 +678,7 @@ def _publish(
     ``append_only`` (the merge-on-read delta publish): the staged files
     EXTEND each affected bucket's live list instead of replacing it, and
     nothing becomes garbage — the bucket's prior files stay live and the
-    read-side ``_resolve`` supersedes their matched rows by ``_seq``.
+    read-side ``_fold_resolve`` supersedes their matched rows by ``_seq``.
     Lock, per-bucket conflict check, version bump, snapshot, and vacuum
     semantics are identical. Delta files are additionally recorded in the
     manifest's ``mor`` ledger (``{bucket_dir: [delta files]}``); a replace
@@ -1038,7 +988,7 @@ def _resolved_state(
     """The table's RESOLVED user-visible state as of ``manifest`` (current
     or a time-travel snapshot), confined to ``restrict`` bucket ids when
     given; internal columns dropped. Under merge-on-read the
-    reconciliation window is confined to DELTA-CARRYING buckets: clean
+    reconciliation fold is confined to DELTA-CARRYING buckets: clean
     buckets stay a bare columnar scan (no exchange, filter pushdown
     intact — Catalyst pushes a caller's filters into both union
     children). At scale this is the Hudi read-optimized/realtime split
@@ -1046,7 +996,7 @@ def _resolved_state(
     cadence, not O(table)."""
     df = _read_live(spark, path, schema, buckets=restrict, manifest=manifest)
     if SEQ_COL in df.columns:
-        # merge-on-read reconciliation (per-key latest delta wins); the
+        # merge-on-read reconciliation (per-column latest writer wins); the
         # supersession column is internal and never reaches callers
         key = layout["key"] if layout else None  # no layout → no MoR delta
         if key is not None and manifest is not None and "mor" in manifest:
@@ -1113,33 +1063,34 @@ def _resolved_state(
                     _read_files(spark, path, schema, skipped_base_files)
                 )
             if dirty_dirs:
-                # _resolve consumes _tombstone on the resolved side; base
+                # the fold consumes _tombstone on the resolved side; base
                 # rows carry it only as an all-null pinned column — drop
                 # for a matching union shape. allowMissingColumns: the
-                # partial-delta fold path returns resolved user rows
-                # without the internal _seq/_bucket columns (null-filled
-                # here, dropped below either way).
+                # fold returns resolved user rows without the internal
+                # _seq/_bucket columns (null-filled here, dropped below
+                # either way).
                 df = clean.drop(TOMBSTONE_COL).unionByName(
                     _resolve_dirty(
-                        spark, path, schema, manifest, key, dirty_dirs
+                        spark, path, schema, manifest, key, dirty_dirs,
+                        lookup=probe_map is not None,
                     ),
                     allowMissingColumns=True,
                 )
             else:
                 # every dirty bucket was excluded (restrict and/or the
-                # delta-range skip): a bare pruned scan, no window planned
+                # delta-range skip): a bare pruned scan, no fold planned
                 df = clean
         elif key is not None:
             # pre-ledger snapshot/manifest: no per-bucket knowledge —
-            # resolve the whole read (always correct)
-            df = _resolve(df, key)
+            # fold the whole read (always correct)
+            df = _fold_resolve(df, key)
     return df.drop(BUCKET_COL, SEQ_COL, TOMBSTONE_COL)
 
 
 def _mor_broadcast_max() -> int:
     """``SPARK_GRAFT_MOR_BROADCAST_MAX``: largest total DELTA-file bytes
     (parquet, per read) reconciled via the broadcast anti-join plan; above
-    it the read falls back to the full per-key window over dirty buckets.
+    it the read falls back to the per-key fold over all dirty-bucket rows.
     The broadcast is delta KEYS only, so the driver/executor memory is a
     fraction of this figure."""
     return int(os.environ.get("SPARK_GRAFT_MOR_BROADCAST_MAX", str(64 << 20)))
@@ -1162,81 +1113,62 @@ def _resolve_dirty(
     manifest: dict,
     key: str,
     dirty_dirs: list[str],
+    lookup: bool = False,
 ) -> DataFrame:
-    """Reconciled state of the DELTA-CARRYING buckets. Two plans:
+    """Reconciled state of the DELTA-CARRYING buckets, always through the
+    per-column fold (``_fold_resolve``). Two plans:
 
     * **Broadcast anti-join** (deltas small — the CDC case): the ledger
       splits each dirty bucket's live files into base vs delta; base rows
-      whose key appears in ANY delta row are superseded (an anti-join
-      against the broadcast delta key set — tombstoned keys included, so
-      deletes can't resurrect), and the per-key window runs over DELTA
-      ROWS ONLY. The base side is never shuffled: a maintenance append of
-      k rows costs readers O(k) window work + a broadcast, not an
-      O(bucket-rows) key exchange per action. This is what makes
-      write-then-reread loops (run_incremental's three publishes with
-      interleaved phase reads) affordable under MoR.
-    * **Full window** (deltas above ``SPARK_GRAFT_MOR_BROADCAST_MAX``, or
-      ledger files unreadable): the always-correct per-key window over
-      all dirty-bucket rows.
-
-    When any dirty bucket carries PARTIAL-column deltas (``mor_cols``
-    ledger), the supersession is per COLUMN, not per row — the same two
-    plans with the fold swapped in: the broadcast plan folds (delta rows ∪
-    the delta-MATCHED base rows) — a base row touched by a partial delta
-    still supplies its unmasked columns, so unlike the full-width plan it
-    must ENTER the fold rather than being anti-joined away (one extra
-    key-pruned pass over the dirty buckets' base files; the fold's
-    shuffle stays O(delta keys)); the fallback folds everything."""
+      whose key appears in NO delta row pass through untouched (an
+      anti-join against the broadcast delta key set), and the fold runs
+      over the delta rows plus the delta-MATCHED base rows (a semi-join
+      on the same key set — a base row touched by a partial delta still
+      supplies its unmasked columns). The base side is never shuffled:
+      a maintenance append of k rows costs readers O(k) fold work, two
+      key-pruned passes over the dirty buckets' base files and a
+      broadcast, not an O(bucket-rows) key exchange per action. This is
+      what makes write-then-reread loops affordable under MoR.
+    * **Full fold** (a point ``lookup``, deltas above
+      ``SPARK_GRAFT_MOR_BROADCAST_MAX``, or ledger files unreadable): the
+      always-correct fold over all dirty-bucket rows. A lookup's key
+      filter reaches every scan through the fold's grouping key, so its
+      shuffle is O(probed rows) and each file is read once — the
+      broadcast plan's second base pass would buy it nothing."""
     ledger = manifest.get("mor") or {}
     delta_files = [
         os.path.join(path, d, f) for d in dirty_dirs for f in ledger[d]
     ]
-    base_by_dir = {
-        d: [
-            f
-            for f in manifest["live"].get(d, [])
-            if f not in set(ledger[d])
-        ]
-        for d in dirty_dirs
-    }
     base_files = [
-        os.path.join(path, d, f) for d, fs in base_by_dir.items() for f in fs
+        os.path.join(path, d, f)
+        for d in dirty_dirs
+        for f in manifest["live"].get(d, [])
+        if f not in set(ledger[d])
     ]
     try:
         delta_bytes = sum(os.path.getsize(f) for f in delta_files)
     except OSError:
         delta_bytes = None  # raced a GC — take the manifest-listed path
-    partial = _dirty_has_partial(manifest, dirty_dirs)
-    if delta_bytes is not None and delta_bytes <= _mor_broadcast_max():
-        if not partial:
-            delta = _read_files(spark, path, schema, delta_files)
-            base = _read_files(spark, path, schema, base_files)
-            superseded = delta.select(key).distinct()
-            base = base.join(F.broadcast(superseded), on=key, how="anti")
-            return base.drop(TOMBSTONE_COL).unionByName(_resolve(delta, key))
-        delta = _read_files_masked(
-            spark, path, schema, manifest, dirty_dirs, files_by_dir=ledger
-        )
-        base = _read_files(spark, path, schema, base_files)
-        dkeys = delta.select(key).distinct()
-        untouched = base.join(F.broadcast(dkeys), on=key, how="anti")
-        matched = base.join(F.broadcast(dkeys), on=key, how="semi")
-        folded = _fold_resolve(
-            matched.withColumn(
-                MASK_COL, F.lit(None).cast("array<string>")
-            ).unionByName(delta),
-            key,
-        )
-        return untouched.drop(TOMBSTONE_COL).unionByName(
-            folded, allowMissingColumns=True
-        )
-    dirty_ids = [int(d.split("=", 1)[1]) for d in dirty_dirs]
-    if partial:
+    if lookup or delta_bytes is None or delta_bytes > _mor_broadcast_max():
         return _fold_resolve(
             _read_files_masked(spark, path, schema, manifest, dirty_dirs), key
         )
-    dirty = _read_live(spark, path, schema, buckets=dirty_ids, manifest=manifest)
-    return _resolve(dirty, key)
+    delta = _read_files_masked(
+        spark, path, schema, manifest, dirty_dirs, files_by_dir=ledger
+    )
+    base = _read_files(spark, path, schema, base_files)
+    dkeys = delta.select(key).distinct()
+    untouched = base.join(F.broadcast(dkeys), on=key, how="anti")
+    matched = base.join(F.broadcast(dkeys), on=key, how="semi")
+    folded = _fold_resolve(
+        matched.withColumn(
+            MASK_COL, F.lit(None).cast("array<string>")
+        ).unionByName(delta),
+        key,
+    )
+    return untouched.drop(TOMBSTONE_COL).unionByName(
+        folded, allowMissingColumns=True
+    )
 
 
 #: largest key list served by an In-filter before the point-lookup read
@@ -1451,10 +1383,11 @@ def read_changes(
     offers upstream, now available downstream of every keyed table.
 
     Scale shape, three tiers. (0) WRITE-TIME CAPTURE (Delta CDF's
-    ``_change_data``): EVERY publish — MoR delta append or CoW bucket
-    rewrite — records its pre/postimage rows in a per-version sidecar
-    (one join of the updates with the update keys' rows of the merge's
-    target read; deletes pay one key-restricted preimage read;
+    ``_change_data``): every MERGING publish — full-width MoR delta
+    append or CoW bucket rewrite — records its pre/postimage rows in a
+    per-version sidecar (one join of the updates with the update keys'
+    rows of the merge's target read; deletes pay one key-restricted
+    preimage read; partial-column deltas record none;
     ``SPARK_GRAFT_SINK_CDC=off`` opts out)
     — a window whose every version captured is served by netting
     first-preimage/last-postimage per key over the sidecar rows,
@@ -1465,12 +1398,11 @@ def read_changes(
     bucket whose file list only EXTENDED by MoR delta files takes the
     APPEND FAST PATH (Hudi incremental query: the log suffix IS the
     change capture): changed keys are exactly the suffix files' keys, the
-    after-state resolves within the suffix alone (suffix ``_seq`` values
-    are strictly newer than anything in the from-state) — or, when the
-    suffix carries PARTIAL-column deltas (which never record a sidecar),
-    from the key-restricted resolved state at ``to_version`` — and the
     before-state read is key-restricted (In pushdown / broadcast
-    semi-join) either way: O(changed keys), never O(bucket rows).
+    semi-join), and the after-state is the per-column fold of that
+    before-state with the suffix's masked delta rows (suffix ``_seq``
+    values are strictly newer than anything in the from-state):
+    O(changed keys), never O(bucket rows).
     (2) Rewritten buckets (CoW upserts published with capture
     off, or legacy versions) take the full resolved-state diff and
     honestly pay the write path's blast radius — the state-diff fallback
@@ -1536,8 +1468,9 @@ def read_changes(
         ] + [c for c in extra if c in df.columns]
         return df.select(*keep)
     # tier 0 — write-time change capture: if EVERY version in the window
-    # recorded a CDC sidecar (MoR publishes, deletes, compactions, cursor
-    # commits all do; CoW merges don't), net first-preimage/last-postimage
+    # recorded a CDC sidecar (merges in both write modes, deletes,
+    # compactions and cursor commits all do; partial-column deltas
+    # don't), net first-preimage/last-postimage
     # per key over the sidecar rows. O(changed rows); no table file is
     # opened at all. Entries live in the CURRENT manifest and are pruned
     # in sync with version retention, so a retained window is a readable
@@ -1620,52 +1553,31 @@ def read_changes(
             _resolved_state(spark, path, from_schema, from_man, layout, ids)
         )
         before_small = _key_restrict(before_all)
-        to_mor_cols = to_man.get("mor_cols") or {}
-        if any(
-            f in (to_mor_cols.get(d) or {})
-            for d, fs in suffix_by_dir.items()
-            for f in fs
-        ):
-            # PARTIAL deltas in the suffix: a changed key's after-state is
-            # base columns + masked delta columns, so it does NOT resolve
-            # within the suffix alone. Derive it from the BEFORE state the
-            # feed already reads: after(key) = per-column fold of the
-            # key-restricted from-state (sequence 0, full mask) with the
-            # suffix's masked delta rows — suffix sequences are strictly
-            # newer than anything in the from-state, so the fold
-            # reproduces the to-state for exactly the changed keys with
-            # ZERO additional base I/O (a resolved read at to_version
-            # would re-scan the dirty buckets a second and third time —
-            # measured 3 full-width scans per window on the 150M fold
-            # ladder before this). This is the read-time half of the
-            # partial-delta trade: these versions recorded no CDC sidecar.
-            from pyspark.sql.types import BooleanType
+        # after(key) = per-column fold of the key-restricted from-state
+        # (sequence 0, full mask) with the suffix's masked delta rows —
+        # suffix sequences are strictly newer than anything in the
+        # from-state, so the fold reproduces the to-state for exactly the
+        # changed keys with ZERO additional base I/O (a resolved read at
+        # to_version would re-scan the dirty buckets). Full-width suffix
+        # rows carry every column, so they simply win per key.
+        from pyspark.sql.types import BooleanType
 
-            before_aug = (
-                before_small.withColumn(SEQ_COL, F.lit(None).cast("long"))
-                .withColumn(TOMBSTONE_COL, F.lit(None).cast(BooleanType()))
-                .withColumn(MASK_COL, F.lit(None).cast("array<string>"))
-            )
-            delta_masked = _scope(
-                _read_files_masked(
-                    spark, path, to_schema, to_man, appended,
-                    files_by_dir=suffix_by_dir,
-                ).drop(BUCKET_COL),
-                (SEQ_COL, TOMBSTONE_COL, MASK_COL),
-            )
-            after_small = _fold_resolve(
-                before_aug.unionByName(delta_masked, allowMissingColumns=True),
-                key,
-            )
-        else:
-            # suffix rows carry strictly higher _seq than anything in the
-            # from-state (publish versions are monotone) and are
-            # full-width, so the after-state of every candidate key
-            # resolves WITHIN the suffix alone — the after side never
-            # opens a base file
-            after_small = _scope(
-                _resolve(delta, key).drop(BUCKET_COL, SEQ_COL, TOMBSTONE_COL)
-            )
+        before_aug = (
+            before_small.withColumn(SEQ_COL, F.lit(None).cast("long"))
+            .withColumn(TOMBSTONE_COL, F.lit(None).cast(BooleanType()))
+            .withColumn(MASK_COL, F.lit(None).cast("array<string>"))
+        )
+        delta_masked = _scope(
+            _read_files_masked(
+                spark, path, to_schema, to_man, appended,
+                files_by_dir=suffix_by_dir,
+            ).drop(BUCKET_COL),
+            (SEQ_COL, TOMBSTONE_COL, MASK_COL),
+        )
+        after_small = _fold_resolve(
+            before_aug.unionByName(delta_masked, allowMissingColumns=True),
+            key,
+        )
         parts.append(_diff_states(before_small, after_small, key))
     out = parts[0]
     for p in parts[1:]:
@@ -1915,7 +1827,6 @@ def upsert_parquet(
     mor = _sink_write_mode(mode) == "mor"
     if (
         mor
-        and _partial_deltas_enabled()
         and stored is not None
         and not {
             f.name for f in stored.fields if f.name not in RESERVED_COLS
@@ -2010,9 +1921,9 @@ def _append_partial_delta(
     carrying ONLY the update's columns, and record those columns in the
     manifest's ``mor_cols`` ledger in the same commit. No base row is
     read, materialized, or rewritten — the whole publish (I/O and
-    compute) is O(|updates|), flat in store size (ladder:
-    tools/partial_delta_ladder.py). Schema evolution: update columns the
-    store lacks extend the pinned schema exactly as a merge would.
+    compute) is O(|updates|), flat in store size. Schema evolution:
+    update columns the store lacks extend the pinned schema exactly as a
+    merge would.
 
     ONE write, hash-partitioned on the bucket: every bucket's rows land in
     one task, so each touched bucket gets exactly one delta file, and the
@@ -2145,49 +2056,22 @@ def _merge_and_publish(
     # read and the publish-time conflict check use this one snapshot, so a
     # concurrent rewrite of an affected bucket is detected (not merged over)
     snapshot = _read_manifest(path) or _manifest_from_listing(path)
-    aff_dirs = [f"{BUCKET_COL}={b}" for b in affected]
-    dirty_aff = [d for d in (snapshot.get("mor") or {}) if d in set(aff_dirs)]
-    if _dirty_has_partial(snapshot, dirty_aff):
-        # affected buckets carry PARTIAL deltas: the target must be their
-        # per-column-resolved state (a plain full-row window would let a
-        # partial delta's null-filled absent columns clobber base values).
-        # _resolved_state routes through the partial-aware fold; the
-        # bucket column is recomputed from the key (bit-identical — the
-        # bucketing function is a pure hash of the key).
-        layout = _read_layout(path)
-        target = _with_bucket(
-            _resolved_state(
-                spark, path, stored, snapshot, layout, restrict=affected
-            ),
-            key,
-            layout["n_buckets"],
-        )
-        if mor:
-            target = target.join(u.select(key).distinct(), key, "left_semi")
-    else:
-        # read the affected buckets under the PINNED schema: buckets that
-        # predate an earlier schema evolution lack the newer columns in
-        # their footers, and an inferred read could drop them (Spark
-        # samples files for schema)
-        target = _read_live(
-            spark, path, stored, buckets=affected, manifest=snapshot
-        )
-        if mor:
-            # merge-on-read: only the MATCHED base rows enter the merge —
-            # the unmatched rows of every affected bucket stay untouched
-            # on disk, which is the entire point (write cost O(delta), not
-            # O(bucket)). Prune BEFORE the reconciliation window so its
-            # key shuffle is O(matched rows), not O(affected-bucket rows).
-            target = target.join(
-                u.select(key).distinct(), key, "left_semi"
-            )
-        # reconcile any prior MoR deltas BEFORE merging (a duplicate-key
-        # target would corrupt the full-outer merge); the supersession
-        # column is internal — MoR re-stamps it below, CoW rewrites
-        # resolved rows
-        target = _resolve(target, key)
-        if SEQ_COL in target.columns:
-            target = target.drop(SEQ_COL)
+    layout = _read_layout(path)
+    # the affected buckets' RESOLVED state under the PINNED schema (buckets
+    # that predate a schema evolution lack the newer columns in their
+    # footers; prior MoR deltas are folded, so the full-outer merge never
+    # sees a duplicate key). The bucket column is recomputed from the key
+    # (bit-identical — the bucketing function is a pure hash of the key).
+    target = _with_bucket(
+        _resolved_state(spark, path, stored, snapshot, layout, restrict=affected),
+        key,
+        layout["n_buckets"],
+    )
+    if mor:
+        # merge-on-read: only the MATCHED rows enter the merge — the
+        # unmatched rows of every affected bucket stay untouched on disk,
+        # which is the entire point (write cost O(delta), not O(bucket))
+        target = target.join(u.select(key).distinct(), key, "left_semi")
     capture = _cdc_capture_enabled()
     # write-time change capture is WRITE-MODE-INDEPENDENT: an upsert can
     # only change rows whose key appears in the updates, so one
@@ -2211,7 +2095,7 @@ def _merge_and_publish(
     if mor:
         # stamp the delta rows with this publish's sequence: any prior
         # row for the same key (base: null _seq; older delta: lower _seq)
-        # is superseded at read time by _resolve. snapshot.version+1 is
+        # is superseded at read time by the fold. snapshot.version+1 is
         # safe under concurrency: an overlapping-bucket writer is rejected
         # by the per-bucket conflict check, and a key lives in exactly one
         # bucket, so disjoint-bucket writers sharing a sequence cannot
@@ -2263,7 +2147,6 @@ def _merge_and_publish(
     # evolve the pinned schema AFTER the swap: updates may have introduced
     # new columns (present only in the rewritten buckets' files; the sidecar
     # schema makes them visible as nulls everywhere else)
-    layout = _read_layout(path)
     _write_layout(path, layout["key"], layout["n_buckets"], final_schema)
     # Spark caches file listings per path (FileStatusCache); the swap above
     # happened behind its back.
@@ -2291,8 +2174,8 @@ def delete_keys(
       CoW upsert); rows are physically gone at commit.
     * ``mor``: appends per-bucket tombstone delta rows carrying only
       ``(key, _seq, _tombstone=true)`` — O(deleted keys) write. Reads
-      hide the key immediately (``_resolve`` drops keys whose winning row
-      is a tombstone); the bytes die physically at the next compaction or
+      hide the key immediately (the read-side fold drops keys whose latest
+      row is a tombstone); the bytes die physically at the next compaction or
       CoW rewrite of the bucket. For erasure-compliance the physical
       deadline is therefore the compaction cadence, not the delete call —
       the same contract as Delta deletion vectors + VACUUM.
@@ -2330,26 +2213,13 @@ def delete_keys(
                 F.lit(int(snapshot.get("version", 0)) + 1).cast("long"),
             ).withColumn(TOMBSTONE_COL, F.lit(True))
         else:
-            dirty_aff = [
-                d
-                for d in (snapshot.get("mor") or {})
-                if d in {f"{BUCKET_COL}={b}" for b in affected}
-            ]
-            if _dirty_has_partial(snapshot, dirty_aff):
-                target = _with_bucket(
-                    _resolved_state(
-                        spark, path, stored, snapshot, layout, restrict=affected
-                    ),
-                    key,
-                    n_buckets,
-                )
-            else:
-                target = _read_live(
-                    spark, path, stored, buckets=affected, manifest=snapshot
-                )
-                target = _resolve(target, key)
-                if SEQ_COL in target.columns:
-                    target = target.drop(SEQ_COL)
+            target = _with_bucket(
+                _resolved_state(
+                    spark, path, stored, snapshot, layout, restrict=affected
+                ),
+                key,
+                n_buckets,
+            )
             out = target.join(k.select(key), key, "left_anti")
         out = out.repartition(max(len(affected), 1), F.col(BUCKET_COL))
         tmp = f"{path}.__delete_tmp_{uuid.uuid4().hex[:8]}"
@@ -2527,12 +2397,13 @@ def compact_keyed_table(
     # pinned schema: a compaction must not drop columns that older files in
     # a bucket lack (see read_keyed_table)
     stored = _stored_schema(layout)
-    if _dirty_has_partial(manifest, to_compact):
-        # partial-column deltas fold per COLUMN: read the compacting
-        # buckets with their presence masks and resolve — compaction is
-        # where a partial table pays the deferred merge, once, instead of
-        # every publish paying it (the write/read trade the partial path
-        # makes)
+    if stored is not None and SEQ_COL in stored.names:
+        # compaction IS the merge-on-read merge: fold the compacting
+        # buckets' deltas into their base (read with their presence masks)
+        # and write resolved rows — compaction is where a MoR table pays
+        # the deferred merge, once, instead of every publish paying it.
+        # _seq reads back null (= oldest) for them, so later deltas still
+        # supersede correctly.
         data = _with_bucket(
             _fold_resolve(
                 _read_files_masked(spark, path, stored, manifest, to_compact),
@@ -2543,12 +2414,6 @@ def compact_keyed_table(
         )
     else:
         data = _read_live(spark, path, stored, buckets=ids, manifest=manifest)
-        if SEQ_COL in data.columns:
-            # compaction IS the merge-on-read merge: fold delta rows into
-            # their base (latest _seq per key wins) and write resolved
-            # rows — the column reads back null (= oldest) for them, so
-            # later deltas still supersede correctly
-            data = _resolve(data, layout["key"]).drop(SEQ_COL)
     # one task per bucket → exactly one output file per bucket directory;
     # KEY-SORTED within the bucket, so the file's parquet row-group min/max
     # stats on the key column are tight non-overlapping ranges — a point

@@ -298,8 +298,8 @@ def test_flagship_loop_defaults_to_mor(spark, tmp_path, monkeypatch):
     appends without any env configuration, because its single commit is
     the measured write floor (CoW's backfill-equal publish is the 1.47×
     sf10 ceiling; MoR measured 2.11×). `cow` stays the GLOBAL sink
-    default (read-optimized tables), the env var remains the operator
-    override, and an explicit write_mode= wins over both."""
+    default (read-optimized tables), and the env var remains the operator
+    override."""
     from es_household_retention_spark_job_spark.sinks.upsert import (
         _read_manifest,
         _sink_write_mode,
@@ -326,15 +326,13 @@ def test_flagship_loop_defaults_to_mor(spark, tmp_path, monkeypatch):
     assert _read_manifest(p_inc).get("mor"), "flagship publish was not MoR"
     assert _state(spark, p_inc) == want
 
-    # explicit write_mode="cow" overrides the flagship default
+    # SPARK_GRAFT_SINK_WRITE_MODE=cow overrides the flagship default
     p2, e2 = _setup(spark, tmp_path, "dcow", base, fresh=True)
     run_retention(spark, p2, e2, FIXTURE_CLIENT, FIXTURE_AS_OF)
     encounter.write.mode("overwrite").parquet(e2)
     spark.catalog.refreshByPath(e2)
-    run_incremental(
-        spark, p2, e2, delta, FIXTURE_CLIENT, FIXTURE_AS_OF,
-        write_mode="cow",
-    )
+    monkeypatch.setenv("SPARK_GRAFT_SINK_WRITE_MODE", "cow")
+    run_incremental(spark, p2, e2, delta, FIXTURE_CLIENT, FIXTURE_AS_OF)
     assert not (_read_manifest(p2) or {}).get("mor")
     assert _state(spark, p2) == want
 

@@ -10,8 +10,9 @@ column (latest carrying writer wins). These tests pin:
 * every read surface over a partial-dirty table: full scan, point lookup,
   time travel, change feed (append fast path), CoW merge target,
   compaction fold, and the incremental-aggregate fold;
-* the env escape hatch (SPARK_GRAFT_SINK_PARTIAL=off → round-10 full-width
-  merge behavior).
+* the fold as the ONE reconciliation: a property test replays random
+  histories of base rows, partial deltas, full-width deltas (null mask)
+  and tombstones against a dict model.
 
 Reference: the ES sink's partial-document upsert (HRP:297-302) — "fields
 present in the update replace the stored fields" — which is a per-FIELD
@@ -384,25 +385,6 @@ def test_partial_schema_evolution_new_column(spark, table, monkeypatch):
     assert st["b"] == {"v": 2, "w": "y", "nw": None}
 
 
-def test_partial_disabled_env_restores_merge_path(spark, table, monkeypatch):
-    """SPARK_GRAFT_SINK_PARTIAL=off: subset-column MoR upserts take the
-    round-10 full-width merge path — same resolved state, full-width
-    delta rows, no mor_cols ledger."""
-    _mor(monkeypatch)
-    monkeypatch.setenv("SPARK_GRAFT_SINK_PARTIAL", "off")
-    upsert_parquet(
-        spark,
-        table,
-        spark.createDataFrame([("b", 20), ("d", 40)], "k string, v int"),
-        key="k",
-        n_buckets=4,
-    )
-    man = _manifest(table)
-    assert man.get("mor") and not man.get("mor_cols")
-    assert _state(spark, table)["b"] == {"v": 20, "w": "y"}
-    assert _state(spark, table)["d"] == {"v": 40, "w": None}
-
-
 def test_partial_buckets_come_from_the_staged_write(spark, table, monkeypatch):
     """The partial path reads its touched buckets off the staged write
     instead of collecting them first. An empty batch stages none: with
@@ -659,9 +641,11 @@ def test_column_scoped_feed_semantics_and_pruning(spark, tmp_path, monkeypatch):
 
 # ---------------------------------------------------------------------------
 # Property test for the per-column fold itself (hypothesis): random event
-# histories per key — base rows, masked partial rows, full rows, tombstones,
-# in arbitrary sequence order — must resolve exactly like a sequential
-# dict-replay of the same events. This is the deepest logic the round-11
+# histories per key — base rows, masked partial rows, full-width rows (null
+# mask, the form full-width MoR delta files read back as), tombstones, in
+# arbitrary sequence order — must resolve exactly like a sequential
+# dict-replay of the same events. The fold is the sink's only
+# reconciliation, so this is the property test for every MoR read. This is the deepest logic the round-11
 # sink added (tombstone cutoffs interacting with per-column carrying
 # masks); the scripted tests pin named scenarios, this pins the space.
 # ---------------------------------------------------------------------------
@@ -672,13 +656,15 @@ from hypothesis import strategies as st  # noqa: E402
 _COLS = ["v", "w"]
 
 # one event per key per sequence slot: base row (seq 0, all columns),
-# delta carrying a column subset (possibly explicit nulls), or tombstone
+# delta carrying a column subset (possibly explicit nulls), full-width
+# delta (every column, null mask), or tombstone
 _EVENT = st.one_of(
     st.tuples(
         st.just("delta"),
         st.sets(st.sampled_from(_COLS), min_size=1),
         st.integers(0, 9),
     ),
+    st.tuples(st.just("full"), st.just(frozenset(_COLS)), st.integers(0, 9)),
     st.tuples(st.just("tomb"), st.just(frozenset()), st.just(0)),
 )
 _HISTORY = st.tuples(st.booleans(), st.lists(_EVENT, min_size=0, max_size=5))
@@ -726,7 +712,7 @@ def test_fold_resolve_matches_dict_replay(spark, hist):
                     w=vals.get("w"),
                     _seq=seq,
                     _tombstone=None,
-                    _mask=sorted(cols),
+                    _mask=None if kind == "full" else sorted(cols),
                 )
             )
             if not alive:

@@ -1372,9 +1372,9 @@ def test_delete_whole_bucket_cow(spark, tmp_path):
 def test_mor_read_resolves_only_dirty_buckets(spark, tmp_path, monkeypatch):
     """The MoR read tax is confined to delta-carrying buckets: the plan is
     a UNION of a bare scan (clean buckets — no exchange, pushdown intact)
-    and one reconciliation window (dirty buckets only). A full-table
-    window would tax every read with an O(table) key shuffle that
-    compaction cadence could never claw back for clean buckets."""
+    and one reconciliation fold (dirty buckets only). A full-table fold
+    would tax every read with an O(table) key shuffle that compaction
+    cadence could never claw back for clean buckets."""
     n = 4
     path = str(tmp_path / "mor_split")
     keys = [f"k{i}" for i in range(40)]
@@ -1397,9 +1397,9 @@ def test_mor_read_resolves_only_dirty_buckets(spark, tmp_path, monkeypatch):
     df = read_keyed_table(spark, path)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Union" in plan  # split read, not a full-table resolve
-    # exactly one reconciliation window operator (WindowGroupLimit rows
-    # also contain the substring "Window" — count the operator itself)
-    assert plan.count("Window [row_number") == 1
+    # exactly one reconciliation fold: the final step of its one
+    # aggregate (the partial step's functions read "partial_max(")
+    assert plan.count("functions=[max(") == 1
     got = {r["k"]: r["v"] for r in df.collect()}
     assert got[target] == 7 and len(got) == len(keys)
     # keys of OTHER buckets are served by the clean (window-free) side
@@ -2183,15 +2183,16 @@ def test_cow_capture_tier_under_default_mode(spark, tmp_path, monkeypatch):
 
 
 @pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_capture_equals_merge_diff(spark, tmp_path, monkeypatch, mode):
+def test_capture_equals_merge_diff(spark, tmp_path, mode):
     """A merging publish's CDC sidecar holds exactly the rows of the state
     diff of its merge — ``_diff_states(pre, _merge_frames(pre, u))`` over
     the update keys' stored rows ``pre`` — as a multiset, with the same
     column names and types. Covered: an insert, a value change, a
     same-value update (no row), a null → value change, an update adding
-    a column, and one carrying a strict subset of the columns; under MoR
-    every checked publish merges into buckets already carrying deltas (a
-    partial one first, then full-width ones)."""
+    a column, and (CoW only — under MoR it lands as an uncaptured partial
+    delta) one carrying a strict subset of the columns; under MoR the
+    checked publish merges into buckets already carrying a partial
+    delta."""
     import os
     from collections import Counter
 
@@ -2260,9 +2261,10 @@ def test_capture_equals_merge_diff(spark, tmp_path, monkeypatch, mode):
          ("d", "update_preimage"), ("d", "update_postimage"),
          ("n", "insert")],
     )
+    if mode == "mor":
+        return  # a strict column subset under MoR is a partial delta
     # a strict column subset through the full-width merge: the columns it
     # lacks keep their stored values in the postimage
-    monkeypatch.setenv("SPARK_GRAFT_SINK_PARTIAL", "off")
     upsert_and_check(
         spark.createDataFrame(
             [("a", None), ("c", "z"), ("m", "g")], "k string, w string"
@@ -2441,10 +2443,10 @@ def test_point_lookup_skips_nonoverlapping_deltas(spark, tmp_path, monkeypatch):
     assert set(st) == set(man["mor"][d])  # every delta file has a range
     assert all(lo == 90 and hi == 99 for lo, hi in st.values())
 
-    # non-overlapping probe: base file only, no window in the plan
+    # non-overlapping probe: base file only, no fold in the plan
     df = read_keyed_table(spark, path, keys=[5, 17])
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
+    assert "Aggregate" not in plan
     delta_files = {f"{d}/{f}" for f in man["mor"][d]}
     touched = {"/".join(f.split("/")[-2:]) for f in df.inputFiles()}
     assert not (touched & delta_files)
@@ -2494,10 +2496,10 @@ def test_point_lookup_bloom_skips_in_range_absent_probes(spark, tmp_path, monkey
     assert all(lo == 10 and hi == 90 for lo, hi in st.values())
 
     # odd probes inside [10, 90]: range overlaps, Bloom says absent →
-    # base file only, no window planned, no delta file opened
+    # base file only, no fold planned, no delta file opened
     df = read_keyed_table(spark, path, keys=[15, 77])
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
+    assert "Aggregate" not in plan
     delta_files = {f"{d}/{f}" for f in man["mor"][d]}
     touched = {"/".join(f.split("/")[-2:]) for f in df.inputFiles()}
     assert not (touched & delta_files)

@@ -111,11 +111,11 @@ def main() -> None:
         run_retention(spark, p_inc, enc_base, CLIENT, TESTDATA_AS_OF)
         delta = enc.where(F.col("admit_date") >= cutoff_ms)
         t0 = time.time()
-        # explicit write_mode: the flagship loop defaults to MoR (r12),
-        # so the CoW arm must ask for cow by name
+        # the flagship loop defaults to MoR (r12), so the CoW arm must
+        # ask for cow by name through the env override
+        os.environ["SPARK_GRAFT_SINK_WRITE_MODE"] = mode
         stats = run_incremental(
-            spark, p_inc, enc_all, delta, CLIENT, TESTDATA_AS_OF,
-            write_mode=mode,
+            spark, p_inc, enc_all, delta, CLIENT, TESTDATA_AS_OF
         )
         t_incremental = time.time() - t0
         os.environ.pop("SPARK_GRAFT_SINK_WRITE_MODE", None)

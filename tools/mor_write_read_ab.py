@@ -12,7 +12,7 @@ Times, per mode, on the same store state:
     maintenance that ends the read tax)
 
 Together with tools/incremental_rehearsal.py (which couples the two sides
-through run_incremental's three publishes + interleaved reads) this
+through run_incremental's one publish + interleaved reads) this
 separates WHERE each mode's cost lives: MoR converts O(affected-bucket
 rows) writes into O(delta) appends, CoW converts reads into window-free
 scans — the crossover is the store's write:read ratio.
@@ -98,8 +98,8 @@ def main() -> None:
         run_retention(spark, base, enc_path, "HOUSEHOLD", TESTDATA_AS_OF)
         # three write shapes (the delta carries a SUBSET of columns, so
         # plain "mor" takes the round-11 partial-column path; "mor_full"
-        # pins the pre-11 full-width merge behavior via the env escape
-        # hatch as the control)
+        # upserts the same change as FULL-WIDTH rows, which takes the
+        # full-width MoR merge, as the control)
         for mode in ("cow", "mor_full", "mor"):
             p = str(work / f"store_{mode}")
             shutil.copytree(base, p)
@@ -111,16 +111,15 @@ def main() -> None:
             step = max(out["persons"] // n_delta, 1)
             delta = (
                 read_keyed_table(spark, p)
-                .select("person_id")
                 .where(F.abs(F.xxhash64("person_id", F.lit(7))) % step == 0)
                 .withColumn("processing_complete", F.lit(False))
             )
+            if mode != "mor_full":
+                delta = delta.select("person_id", "processing_complete")
             delta.count()  # plan cost paid outside the timed region
             os.environ["SPARK_GRAFT_SINK_WRITE_MODE"] = (
                 "cow" if mode == "cow" else "mor"
             )
-            if mode == "mor_full":
-                os.environ["SPARK_GRAFT_SINK_PARTIAL"] = "off"
             pre_files = _parquet_files(p)
             t0 = time.time()
             upsert_parquet(spark, p, delta, key="person_id", n_buckets=64)
@@ -130,7 +129,6 @@ def main() -> None:
                 sz for f, sz in post_files.items() if f not in pre_files
             )
             os.environ.pop("SPARK_GRAFT_SINK_WRITE_MODE", None)
-            os.environ.pop("SPARK_GRAFT_SINK_PARTIAL", None)
             t0 = time.time()
             checksum = _full_read(spark, p)
             r = time.time() - t0
